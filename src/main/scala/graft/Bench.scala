@@ -245,8 +245,11 @@ object Bench {
       val gc0 = jvmGcMs
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
+        // the query's pins release when its scope ends, after the clock
+        val sec = ops.Pins.scope(name) {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
         listener.settle(spark)
         Some((sec, jvmGcMs - gc0, listener.spill.get(), listener.peak.get(),
           listener.run.get(), listener.cpu.get()))

@@ -48,7 +48,7 @@ object GraftSession {
       // filter that re-evaluates the whole expensive expression per row
       // while pruning nothing this engine's operators did not already
       // prune (every graft op null-filters its keys at the source — the
-      // ccInternal/editDistance/linesOf pattern — so the inference is
+      // connectedComponents/editDistance/linesOf pattern — so the inference is
       // redundant here, unlike schemas with nullable join keys). A/B on
       // the dedup/text subset: 13.9 s → 11.5 s (dd_editdist 2.6→1.3,
       // dd_jaccard_join 1.05→0.68). Env-overridable for workloads with

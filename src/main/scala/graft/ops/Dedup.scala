@@ -231,24 +231,7 @@ object Dedup {
   def minhashLsh(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numPerm: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8, seed: Long = 42, maxBucket: Int = 0): DataFrame =
-    minhashLshReleasable(df, idCol, textCol, k, numPerm, bands,
-      threshold, seed, maxBucket)._1
-
-  /** [[minhashLsh]] plus the frames it localCheckpoints that the result
-    * still reads lazily (the band-key postings, materialized whenever a
-    * cap is active): one-shot callers rely on the ContextCleaner, but a
-    * long-running maintainer ([[graft.sources.MinhashIndex.probe]]'s
-    * batch-internal pass inside [[graft.streaming.NearDupStream]])
-    * releases them once the pairs are materialized — otherwise every
-    * trigger would pin one posting-sized checkpoint for the session
-    * lifetime (the mergeComponentsReleasable pattern).
-    */
-  private[graft] def minhashLshReleasable(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numPerm: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8, seed: Long = 42,
-      maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) = {
+      threshold: Double = 0.8, seed: Long = 42, maxBucket: Int = 0): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     val cap = if (maxBucket == 0) defaultMaxBucket(df.count()) else maxBucket
     val withSig = sigFrame(df, idCol, textCol, k, numPerm, seed)
@@ -258,7 +241,7 @@ object Dedup {
     // shingle+signature scan (SkewBench r10: the re-pay cost 1.3× the
     // whole uncapped run on the 50k-doc skew corpus)
     val allBandKeys0 = bandKeyRows(withSig, idCol, numPerm, bands)
-    val allBandKeys = if (cap > 0) allBandKeys0.localCheckpoint() else allBandKeys0
+    val allBandKeys = if (cap > 0) Pins.pin(allBandKeys0) else allBandKeys0
     val bandKeys = dropOverCapBuckets(allBandKeys, Seq("__band", "__bkey"), cap)
     val a = bandKeys.select(col(idCol).as("id_a"), col("__band"), col("__bkey"))
     val b = bandKeys.select(col(idCol).as("id_b"), col("__band"), col("__bkey"))
@@ -269,13 +252,12 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
     val sh = withSig.select(col(idCol), col("__sh"))
-    val pairs = candidates
+    candidates
       .join(sh.select(col(idCol).as("id_a"), col("__sh").as("__sha")), "id_a")
       .join(sh.select(col(idCol).as("id_b"), col("__sh").as("__shb")), "id_b")
       .withColumn("jaccard", jaccard(col("__sha"), col("__shb")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    (pairs, if (cap > 0) Seq(allBandKeys) else Seq.empty)
   }
 
   /** EXACT n-gram Jaccard set-similarity self-join — no cross product and
@@ -388,7 +370,7 @@ object Dedup {
       .filter(col("__s").isNotNull && length(col("__s")) >= minLen)
       .groupBy("__s").agg(collect_list(col("__id")).as("__ids"))
       .withColumn("__gid", xxhash64(col("__s")))
-      .localCheckpoint()
+      .transform(Pins.pin(_))
     // identical strings are dist-0 pairs by definition
     val within = groups.filter(size(col("__ids")) >= 2)
       .select(explode(col("__ids")).as("id_a"), col("__ids"))
@@ -486,6 +468,22 @@ object Dedup {
     within.unionByName(cross)
   }
 
+  /** The w-bit chunk array of a 64-bit hash column — the shared banding
+    * expression for [[hammingPairs]] and the persisted
+    * [[graft.sources.HammingIndex]] (the [[sigFrame]] contract: index
+    * probes must chunk exactly as the in-flight path does, or they
+    * would miss collisions it finds). `hashColName` is interpolated
+    * into a SQL lambda because the per-element shift amount is itself
+    * the lambda variable (the Column API's shiftright takes a literal).
+    */
+  private[graft] def hammingChunks(hashColName: String, pieces: Int): Column = {
+    require(pieces >= 2 && 64 % pieces == 0, "pieces must divide 64")
+    val width = 64 / pieces
+    val mask = if (width == 64) -1L else (1L << width) - 1L
+    expr(s"transform(sequence(0, ${pieces - 1}), " +
+      s"j -> shiftright($hashColName, cast(j * $width AS int)) & ${mask}L)")
+  }
+
   /** Generic Hamming near-dup pairs over ANY 64-bit signature column
     * (SimHash, perceptual image hashes, audio fingerprints): pigeonhole
     * banding — split the word into `pieces` chunks; hamming ≤ maxDist <
@@ -525,36 +523,7 @@ object Dedup {
     */
   def hammingPairs(df: DataFrame, idCol: String, hashCol: String,
                    maxDist: Int, pieces: Int = 8,
-                   maxBucket: Int = 0): DataFrame =
-    hammingPairsReleasable(df, idCol, hashCol, maxDist, pieces, maxBucket)._1
-
-  /** The w-bit chunk array of a 64-bit hash column — the shared banding
-    * expression for [[hammingPairs]] and the persisted
-    * [[graft.sources.HammingIndex]] (the [[sigFrame]] contract: index
-    * probes must chunk exactly as the in-flight path does, or they
-    * would miss collisions it finds). `hashColName` is interpolated
-    * into a SQL lambda because the per-element shift amount is itself
-    * the lambda variable (the Column API's shiftright takes a literal).
-    */
-  private[graft] def hammingChunks(hashColName: String, pieces: Int): Column = {
-    require(pieces >= 2 && 64 % pieces == 0, "pieces must divide 64")
-    val width = 64 / pieces
-    val mask = if (width == 64) -1L else (1L << width) - 1L
-    expr(s"transform(sequence(0, ${pieces - 1}), " +
-      s"j -> shiftright($hashColName, cast(j * $width AS int)) & ${mask}L)")
-  }
-
-  /** [[hammingPairs]] plus the hash-group frame it localCheckpoints
-    * (three consumers read it lazily): one-shot callers rely on the
-    * ContextCleaner; a long-running maintainer
-    * ([[graft.sources.HammingIndex.probeReleasable]]'s batch-internal
-    * pass) frees it once the pairs are materialized — the
-    * [[minhashLshReleasable]] discipline.
-    */
-  private[graft] def hammingPairsReleasable(
-      df: DataFrame, idCol: String, hashCol: String,
-      maxDist: Int, pieces: Int = 8,
-      maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) = {
+                   maxBucket: Int = 0): DataFrame = {
     require(pieces >= 2 && 64 % pieces == 0, "pieces must divide 64")
     require(maxDist >= 0 && maxDist < pieces,
       "pigeonhole banding needs maxDist < pieces")
@@ -566,7 +535,7 @@ object Dedup {
       .select(col(idCol).as("__id"), col(hashCol).cast("long").as("__h"))
       .filter(col("__h").isNotNull)
       .groupBy("__h").agg(collect_list(col("__id")).as("__ids"))
-      .localCheckpoint()
+      .transform(Pins.pin(_))
     // hash-identical members are dist-0 pairs by definition
     val within = groups.filter(size(col("__ids")) >= 2)
       .select(explode(col("__ids")).as("id_a"), col("__ids"))
@@ -605,7 +574,7 @@ object Dedup {
       .filter(col("__a") =!= col("__b"))
       .select(least(col("__a"), col("__b")).as("id_a"),
         greatest(col("__a"), col("__b")).as("id_b"), col("dist"))
-    (within.unionByName(cross), Seq(groups))
+    within.unionByName(cross)
   }
 
   // ------------------------------------------------------------ simhash
@@ -659,7 +628,7 @@ object Dedup {
     // cosine verify on one core. Fan it out when the scan yields fewer
     // splits than cores (the qProfile guard: a no-op on real multi-file
     // layouts, and the repartition cost is O(n) vectors vs O(n²) work).
-    val e0 = e.localCheckpoint(eager = false)
+    val e0 = Pins.pin(e, eager = false)
     val par = df.sparkSession.sparkContext.defaultParallelism
     val eP = if (e0.rdd.getNumPartitions < par) e0.repartition(par) else e0
     val a = eP.select(col(idCol).as("id_a"), col("__v").as("__va"))
@@ -772,7 +741,7 @@ object Dedup {
     // the nlist=1 oracle regime). Fan the stream side out when the scan
     // yields fewer splits than cores (the qProfile guard; repartition
     // cost is O(n) vectors vs O(Σ|cluster|²) verify work).
-    val a0 = assigned.localCheckpoint(eager = false)
+    val a0 = Pins.pin(assigned, eager = false)
     val par = df.sparkSession.sparkContext.defaultParallelism
     val aP = if (a0.rdd.getNumPartitions < par) a0.repartition(par) else a0
     val a = aP.select(col("__c"), col("id").as("id_a"), col("__v").as("__va"))
@@ -816,19 +785,6 @@ object Dedup {
                           idBCol: String = "id_b", maxIter: Int = 25): DataFrame =
     connectedComponentsWithRounds(pairs, idACol, idBCol, maxIter)._1
 
-  /** [[connectedComponents]] plus the number of large+small-star rounds
-    * it ran — exposed so the O(log n) convergence contract is testable.
-    * `localCutoff` overrides [[LocalCcMaxEdges]] (0 disables the local
-    * fast path — the distributed-contract tests pin the alternating-star
-    * rounds through it).
-    */
-  private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame, idACol: String = "id_a", idBCol: String = "id_b",
-      maxIter: Int = 25, localCutoff: Long = LocalCcMaxEdges): (DataFrame, Int) = {
-    val (labels, rounds, _) = ccInternal(pairs, idACol, idBCol, maxIter, localCutoff)
-    (labels, rounds)
-  }
-
   /** Edge-count gate below which the CC fixpoint finishes as ONE driver
     * union-find instead of O(log n) alternating-star rounds. Every
     * distributed round costs 3-4 exchanges plus a job launch — pure
@@ -846,34 +802,27 @@ object Dedup {
     */
   private[graft] val LocalCcMaxEdges: Long = 200000L
 
-  /** [[connectedComponentsWithRounds]] plus the frames it
-    * localCheckpoints that the RESULT still reads lazily (the pair
-    * frame, the node set, the fixpoint edge set) — a long-lived caller
-    * ([[mergeComponents]], [[graft.streaming.CcStream]]) releases their
-    * cached blocks once it has materialized the labels, so repeated
-    * invocations don't pin one frame copy per call for the session
-    * lifetime. Superseded PER-ROUND edge frames are released inline
-    * here (each round's signature job materializes and
-    * lineage-truncates the next frame, so the previous round's blocks
-    * are dead the moment it returns).
+  /** [[connectedComponents]] plus the number of large+small-star rounds
+    * it ran — exposed so the O(log n) convergence contract is testable.
+    * `localCutoff` overrides [[LocalCcMaxEdges]] (0 disables the local
+    * fast path — the distributed-contract tests pin the alternating-star
+    * rounds through it).
     */
-  private def ccInternal(
-      pairs: DataFrame, idACol: String, idBCol: String,
-      maxIter: Int, localCutoff: Long = LocalCcMaxEdges): (DataFrame, Int, Seq[DataFrame]) = {
+  private[graft] def connectedComponentsWithRounds(
+      pairs: DataFrame, idACol: String = "id_a", idBCol: String = "id_b",
+      maxIter: Int = 25, localCutoff: Long = LocalCcMaxEdges): (DataFrame, Int) = {
     // lazy-checkpoint the pair frame itself: `nodes` and the edge seed
     // both read it, and pair generation is typically the most expensive
     // upstream stage (a similarity join) — without this it would be
     // computed twice. Null endpoints are dropped edge-wise (a pair with
     // no partner is not an edge; NullSafetySpec pins it) so a stray
     // null key can't surface as a (null, null) label row.
-    val raw = pairs.select(col(idACol).cast("long").as("src"),
+    val raw = Pins.pin(pairs.select(col(idACol).cast("long").as("src"),
       col(idBCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint(eager = false)
+      .filter(col("src").isNotNull && col("dst").isNotNull), eager = false)
     // lazy: materializes inside the final labels join, no dedicated job
-    val nodes = raw.select(col("src").as("id"))
-      .union(raw.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(eager = false)
+    val nodes = Pins.pin(raw.select(col("src").as("id"))
+      .union(raw.select(col("dst").as("id"))).distinct(), eager = false)
 
     // large-star: for each node u, hang every LARGER neighbor off
     // min(Γ(u) ∪ {u}) — emitted edges always point big → small
@@ -914,8 +863,8 @@ object Dedup {
         if (r.isNullAt(1)) 0L else r.getLong(1),
         if (r.isNullAt(2)) 0L else r.getLong(2))
     }
-    var edges = raw.filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = false)
+    var edges = Pins.pin(raw.filter(col("src") =!= col("dst")).distinct(),
+      eager = false)
     var prevSig = sig(edges)
     // LOCAL FAST PATH (see LocalCcMaxEdges): the init-sig job above
     // already materialized the distinct edge set and counted it — when
@@ -955,18 +904,18 @@ object Dedup {
       val labels = nodes
         .join(broadcast(mapping), Seq("id"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      return (labels, 0, Seq(raw, nodes, edges))
+      return (labels, 0)
     }
     var rounds = 0
     var converged = prevSig._1 == 0L
     while (rounds < maxIter && !converged) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(eager = false)
+      val next = Pins.pin(smallStar(largeStar(edges)), eager = false)
       val nextSig = sig(next)
       converged = nextSig == prevSig
       // the sig job materialized (and lineage-truncated) `next`: the
       // superseded round's blocks are dead — release them so a deep
       // convergence doesn't pin one edge-frame copy per round
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(edges)
+      Pins.release(edges)
       edges = next
       prevSig = nextSig
       rounds += 1
@@ -974,7 +923,7 @@ object Dedup {
     val labels = nodes
       .join(edges.select(col("src").as("id"), col("dst").as("comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    (labels, rounds, Seq(raw, nodes, edges))
+    (labels, rounds)
   }
 
   /** Incremental connected components — fold NEW near-dup edges into an
@@ -1002,31 +951,17 @@ object Dedup {
     * @return (id, comp) covering labeled ids ∪ new-edge endpoints
     */
   def mergeComponents(labels: DataFrame, newEdges: DataFrame,
-                      idACol: String = "id_a", idBCol: String = "id_b"): DataFrame =
-    mergeComponentsReleasable(labels, newEdges, idACol, idBCol)._1
-
-  /** [[mergeComponents]] plus the frames it localCheckpoints that the
-    * result still reads lazily — the per-trigger maintainer
-    * ([[graft.streaming.CcStream]]) releases them once the merged
-    * labeling is materialized, so a stream running for thousands of
-    * triggers holds ONE labels copy, not three cached frames per
-    * trigger. The super-graph CC's own internals are released inline
-    * here (dead once `merged` is eagerly checkpointed).
-    */
-  private[graft] def mergeComponentsReleasable(
-      labels: DataFrame, newEdges: DataFrame,
-      idACol: String = "id_a", idBCol: String = "id_b"): (DataFrame, Seq[DataFrame]) = {
-    val edges = newEdges.select(col(idACol).cast("long").as("__a"),
+                      idACol: String = "id_a", idBCol: String = "id_b"): DataFrame = {
+    val edges = Pins.pin(newEdges.select(col(idACol).cast("long").as("__a"),
       col(idBCol).cast("long").as("__b"))
-      .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .localCheckpoint(eager = false)
+      .filter(col("__a").isNotNull && col("__b").isNotNull), eager = false)
     val eps = edges.select(col("__a").as("id"))
       .union(edges.select(col("__b").as("id"))).distinct()
     // current label of every endpoint: ONE labels scan behind a
     // broadcast semi-join probe (output is endpoint-sized)
     val seen = labels.join(broadcast(eps), Seq("id"), "left_semi")
       .select(col("id"), col("comp"))
-    val epMap = seen.localCheckpoint() // small; consumed three times
+    val epMap = Pins.pin(seen) // small; consumed three times
     val superEdges = edges
       .join(broadcast(epMap.select(col("id").as("__a"), col("comp").as("__ca"))),
         Seq("__a"), "left")
@@ -1035,10 +970,11 @@ object Dedup {
       .select(coalesce(col("__ca"), col("__a")).as("id_a"),
         coalesce(col("__cb"), col("__b")).as("id_b"))
     // supernode → merged root over the TINY label-level graph; the
-    // CC's internal checkpoints are dead once `merged` materializes
-    val (ccLabels, _, ccFrames) = ccInternal(superEdges, "id_a", "id_b", 25)
-    val merged = ccLabels.localCheckpoint()
-    ccFrames.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
+    // CC's internal pins are dead once `merged` materializes, and
+    // `merged` itself outlives the scope as its result
+    val merged = Pins.scope("Dedup.mergeComponents") {
+      Pins.pin(connectedComponents(superEdges))
+    }
     // relabel the big table in one scan; untouched comps pass through
     val relabeled = labels
       .join(broadcast(merged.select(col("id").as("comp"), col("comp").as("__new"))),
@@ -1050,7 +986,7 @@ object Dedup {
     val newIds = eps.join(broadcast(epMap.select("id")), Seq("id"), "left_anti")
     val newRows = newIds.join(broadcast(merged), Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    (relabeled.unionByName(newRows), Seq(edges, epMap, merged))
+    relabeled.unionByName(newRows)
   }
 
   // ------------------------------------------- incremental (bloom-gated)

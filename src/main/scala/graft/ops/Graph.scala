@@ -25,7 +25,7 @@ object Graph {
     * nothing corpus-sized beyond |E|, and the rank state never exceeds
     * |V| rows. Deterministic given the edge list (the only float
     * nondeterminism is summation order, sub-ulp). The per-round lineage
-    * is cut with localCheckpoint every `checkpointEvery` rounds so deep
+    * is cut with a pin every `checkpointEvery` rounds so deep
     * iteration counts do not replay the whole chain (same discipline as
     * connectedComponents).
     */
@@ -37,9 +37,10 @@ object Graph {
     // iters+2 consumers below (nodes, deg, one contrib join per round),
     // and callers routinely derive it from a corpus-sized join — without
     // the barrier every round replays that join. Materializes on the
-    // first action (the nodes count), |E| rows of two key columns.
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"))
-      .localCheckpoint(eager = false)
+    // first action (the nodes count), |E| rows of two key columns. An
+    // already-pinned edge list is read in place (the Pins projection rule).
+    val e = Pins.pin(edges.select(col(srcCol).as("__s"), col(dstCol).as("__t")),
+      eager = false)
     val nodes = e.select(col("__s").as("__v"))
       .union(e.select(col("__t").as("__v"))).distinct()
     val deg = e.groupBy(col("__s")).agg(count(lit(1)).as("__dg"))
@@ -55,7 +56,7 @@ object Graph {
       ranks = nodes.join(contrib, nodes("__v") === contrib("__t"), "left")
         .select(col("__v"), (base + lit(d) * coalesce(col("__c"), lit(0.0))).as("__p"))
       if (i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint(eager = true)
+        ranks = Pins.pin(ranks)
     }
     ranks.select(col("__v").as("node"), col("__p").as("rank"))
   }
@@ -80,7 +81,7 @@ object Graph {
     * targets), a partial-aggregated (node, label) count, and a
     * min-struct argmax per node — state never exceeds |V| rows, work
     * never exceeds |E| rows, nothing quadratic anywhere. Lineage is
-    * cut with localCheckpoint every `checkpointEvery` rounds (the
+    * cut with a pin every `checkpointEvery` rounds (the
     * [[pageRank]]/connectedComponents discipline).
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
@@ -88,8 +89,8 @@ object Graph {
     require(iters >= 1, s"iters $iters must be >= 1")
     // the pageRank edge barrier: e0 feeds the undirected view TWICE per
     // use (und = e0 ∪ swap(e0)) across nodes + one join per round
-    val e0 = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"))
-      .localCheckpoint(eager = false)
+    val e0 = Pins.pin(edges.select(col(srcCol).as("__s"), col(dstCol).as("__t")),
+      eager = false)
     val und = e0.union(e0.select(col("__t").as("__s"), col("__s").as("__t")))
     val nodes = und.select(col("__s").as("__v")).distinct()
     var labels = nodes.select(col("__v"), col("__v").as("__l"))
@@ -107,7 +108,7 @@ object Graph {
         .agg(min(struct((-col("__c")).as("nc"), col("__l").as("l"))).as("__w"))
         .select(col("__s").as("__v"), col("__w").getField("l").as("__l"))
       if (i % checkpointEvery == 0 && i < iters)
-        labels = labels.localCheckpoint(eager = true)
+        labels = Pins.pin(labels)
     }
     labels.select(col("__v").as("node"), col("__l").as("label"))
   }

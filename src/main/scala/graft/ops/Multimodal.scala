@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  /** Run a per-partition codec's dispose when its task completes — also
+    * when a downstream `limit` stops the partition iterator early.
+    */
+  private def disposeAtTaskEnd(dispose: () => Unit): Unit =
+    org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => dispose())
+
   val FeatDim = 16
   val BatchSize = 256
 
@@ -130,6 +136,7 @@ object Multimodal {
     docs.select(col(idCol).cast("long")).as[Long]
       .mapPartitions { it =>
         val writer = javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
+        disposeAtTaskEnd(() => writer.dispose())
         it.grouped(BatchSize).flatMap(_.iterator.map(id => (id, synthPngWith(id, writer))))
       }
       .toDF(idCol, "media")
@@ -162,6 +169,7 @@ object Multimodal {
         .select(col(idCol).cast("long"), col("media")).as[(Long, Array[Byte])]
     ds.mapPartitions { rows =>
       val reader = javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
+      disposeAtTaskEnd(() => reader.dispose())
       rows.grouped(BatchSize).flatMap { batch =>
         batch.iterator.map { case (id, bytes) =>
           val stream = new javax.imageio.stream.MemoryCacheImageInputStream(
@@ -201,6 +209,7 @@ object Multimodal {
         .select(col(idCol).cast("long"), col("media")).as[(Long, Array[Byte])]
     ds.mapPartitions { rows =>
       val reader = javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
+      disposeAtTaskEnd(() => reader.dispose())
       rows.grouped(BatchSize).flatMap { batch =>
         batch.iterator.map { case (id, bytes) =>
           val stream = new javax.imageio.stream.MemoryCacheImageInputStream(
@@ -299,6 +308,7 @@ object Multimodal {
     docs.select(col(idCol).cast("long")).as[Long]
       .mapPartitions { it =>
         val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
+        disposeAtTaskEnd(() => writer.dispose())
         it.grouped(BatchSize).flatMap(_.iterator.map(id => (id, synthGifWith(id, writer))))
       }
       .toDF(idCol, "media")
@@ -321,6 +331,7 @@ object Multimodal {
         .select(col(idCol).cast("long"), col("media")).as[(Long, Array[Byte])]
     ds.mapPartitions { rows =>
       val reader = javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
+      disposeAtTaskEnd(() => reader.dispose())
       rows.grouped(BatchSize).flatMap { batch =>
         batch.iterator.flatMap { case (id, bytes) =>
           val stream = new javax.imageio.stream.MemoryCacheImageInputStream(

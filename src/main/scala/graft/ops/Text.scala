@@ -1031,7 +1031,7 @@ object Text {
       .filter(col("__bl_dom").isNotNull && col("__bl_dom") =!= "")
       .distinct()
       .withColumn("__bl_depth", size(split(col("__bl_dom"), "\\.")))
-      .localCheckpoint()
+      .transform(Pins.pin(_))
     val depth =
       if (maxDepth > 0) maxDepth
       else {
@@ -1643,8 +1643,8 @@ object Text {
   }
 
   /** MUTABLE history state for [[dedupLinesIncremental]]: the m-bit
-    * Bloom filter and the MATERIALIZED (localCheckpoint) distinct line
-    * digest table. Build ONCE per maintenance cycle via
+    * Bloom filter and the MATERIALIZED (rolling [[Pins.pin]]) distinct
+    * line digest table. Build ONCE per maintenance cycle via
     * [[prepareLineHistory]] — the foreachBatch streaming form must not
     * rescan a 100 TB history on every trigger; with this state each
     * micro-batch costs only its own lines plus the digest probe.
@@ -1653,7 +1653,7 @@ object Text {
     * shape): with it the CCNet hash set survives across TRIGGERS, not
     * just across maintenance cycles — a line first seen in micro-batch
     * N is dropped from micro-batch N+1 (r12 verdict task 2). Release
-    * with [[release]] when the cycle rolls (checkpoint blocks are
+    * with [[release]] when the cycle rolls (the digest table stays
     * pinned until then). Single-writer, like every maintainer here.
     */
   final class LineHistory private[ops] (
@@ -1675,7 +1675,7 @@ object Text {
       * byte-OR'd into the current bits (the aggregate's own merge op,
       * so filter(history ∪ batch) = filter(history) | filter(batch)
       * bit-for-bit). The digest side is the MinhashIndex.Maintainer
-      * swap: union → distinct → localCheckpoint, then the PREVIOUS
+      * swap: union → distinct → rolling pin, then the PREVIOUS
       * generation's blocks release — a long-lived stream pins one
       * digest table, not one per trigger. Cost is the batch's own
       * lines (one batch read feeds both jobs); history is never
@@ -1683,13 +1683,13 @@ object Text {
       * flag the batch's own lines as historical and drop them all.
       */
     def append(batch: DataFrame, textCol: String,
-               delim: String = "\n"): Unit = {
+               delim: String = "\n"): Unit = Pins.scope("LineHistory.append") {
       import graft.functions.FunctionDefs.callAgg
       val q = java.util.regex.Pattern.quote(delim)
       val batchLines = batch.filter(col(textCol).isNotNull)
         .select(explode(split(col(textCol), q)).as("__l"))
         .filter(trim(col("__l")) =!= "")
-        .localCheckpoint()
+        .transform(Pins.pin(_))
       val bf = batchLines
         .agg(callAgg("bloom_agg", xxhash64(col("__l")),
           lit(numBits), lit(numHashes)).as("bf"))
@@ -1703,20 +1703,17 @@ object Text {
       while (i < merged.length) {
         merged(i) = (bloomBytes(i) | bf(i)).toByte; i += 1
       }
-      val next = digestTable
+      val next = Pins.pin(digestTable
         .unionByName(batchLines.select(md5(col("__l")).as("__hh"))
           .withColumn("__seen", lit(1)))
-        .dropDuplicates("__hh")
-        .localCheckpoint()
+        .dropDuplicates("__hh"), rolling = true)
       val previous = digestTable
       digestTable = next
       bloomBytes = merged
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(previous)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(batchLines)
+      Pins.release(previous)
     }
 
-    def release(): Unit =
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(digestTable)
+    def release(): Unit = Pins.release(digestTable)
   }
 
   /** Assemble a [[LineHistory]] from externally-persisted state — the
@@ -1728,10 +1725,10 @@ object Text {
     new LineHistory(bloom, digests, numHashes)
 
   /** Build the [[LineHistory]] state. ONE pass over the history corpus
-    * feeds both halves: the exploded non-blank lines localCheckpoint
+    * feeds both halves: the exploded non-blank lines are pinned
     * first (the corpus read happens exactly once, at that
     * materialization), then the `bloom_agg` head() and the
-    * distinct-digest checkpoint run as two cheap jobs over the
+    * distinct-digest pin run as two cheap jobs over the
     * materialized lines, whose blocks release before returning
     * (ADVICE r12 — the two actions previously each re-scanned history).
     * The trade is explicit: the line blocks hold one copy of the
@@ -1741,29 +1738,28 @@ object Text {
   def prepareLineHistory(history: DataFrame, textCol: String,
                          delim: String = "\n",
                          numBits: Long = 1L << 23,
-                         numHashes: Int = 5): LineHistory = {
-    import graft.functions.FunctionDefs.callAgg
-    val q = java.util.regex.Pattern.quote(delim)
-    val histLines = history.filter(col(textCol).isNotNull)
-      .select(explode(split(col(textCol), q)).as("__l"))
-      .filter(trim(col("__l")) =!= "")
-      .localCheckpoint()
-    val bloom = histLines
-      .agg(callAgg("bloom_agg", xxhash64(col("__l")),
-        lit(numBits), lit(numHashes)).as("bf"))
-      .head().getAs[Array[Byte]]("bf")
-    val digests = histLines.select(md5(col("__l")).as("__hh")).distinct()
-      .withColumn("__seen", lit(1))
-      .localCheckpoint()
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(histLines)
-    new LineHistory(bloom, digests, numHashes)
-  }
+                         numHashes: Int = 5): LineHistory =
+    Pins.scope("Text.prepareLineHistory") {
+      import graft.functions.FunctionDefs.callAgg
+      val q = java.util.regex.Pattern.quote(delim)
+      val histLines = history.filter(col(textCol).isNotNull)
+        .select(explode(split(col(textCol), q)).as("__l"))
+        .filter(trim(col("__l")) =!= "")
+        .transform(Pins.pin(_))
+      val bloom = histLines
+        .agg(callAgg("bloom_agg", xxhash64(col("__l")),
+          lit(numBits), lit(numHashes)).as("bf"))
+        .head().getAs[Array[Byte]]("bf")
+      val digests = Pins.pin(histLines.select(md5(col("__l")).as("__hh")).distinct()
+        .withColumn("__seen", lit(1)), rolling = true)
+      new LineHistory(bloom, digests, numHashes)
+    }
 
   /** One-shot convenience form — for REPEATED batches (the foreachBatch
     * stream) use [[prepareLineHistory]] once + the [[LineHistory]]
     * overload (+ [[LineHistory.append]]) instead: this form pays the
     * history scan on every call AND intentionally never releases the
-    * localCheckpoint'd digest table it builds (the returned frame reads
+    * pinned digest table it builds (the returned frame reads
     * through it and a local checkpoint cannot recompute after
     * unpersist), so repeated calls in a long-lived session accumulate
     * pinned blocks until the frames are GC'd (ADVICE r12).
@@ -1774,10 +1770,10 @@ object Text {
                             numBits: Long = 1L << 23,
                             numHashes: Int = 5): DataFrame = {
     val st = prepareLineHistory(history, textCol, delim, numBits, numHashes)
-    // no release() here: the returned frame reads THROUGH the
-    // checkpointed digests and a local checkpoint cannot recompute
-    // after unpersist — the blocks must outlive the caller's terminal
-    // action (they are GC'd with the RDD when the frame is dropped)
+    // no release() here: the returned frame reads THROUGH the pinned
+    // digests and a local checkpoint cannot recompute after release —
+    // the blocks must outlive the caller's terminal action (they are
+    // GC'd with the RDD when the frame is dropped)
     dedupLinesIncremental(st, batch, idCol, textCol, delim)
   }
 

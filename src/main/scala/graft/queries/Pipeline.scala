@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.{Ann, Dedup, Graph, Multimodal, Text}
+import graft.ops.{Ann, Dedup, Graph, Multimodal, Pins, Text}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -78,7 +78,7 @@ object Pipeline {
   def ddComponentsInc(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val pairs = Dedup.jaccardJoin(docs, "doc_id", "text", k = 3, threshold = 0.8)
-      .localCheckpoint() // the split feeds two CC passes
+      .transform(Pins.pin(_)) // the split feeds two CC passes
     val old = pairs.filter((col("id_a") + col("id_b")) % 3 =!= 0)
     val fresh = pairs.filter((col("id_a") + col("id_b")) % 3 === 0)
     val cc = Dedup.mergeComponents(Dedup.connectedComponents(old), fresh)
@@ -680,7 +680,7 @@ object Pipeline {
           .cast("int").as("roundtrip_ok"))
       // barrier: orderBy's range sampler executes the child, which would
       // run the 10-deep merge cascade a second time (see spPredicates)
-      .localCheckpoint(eager = false)
+      .transform(Pins.pin(_, eager = false))
       .orderBy("doc_id")
   }
 
@@ -990,7 +990,7 @@ object Pipeline {
       .select(col("doc_id"),
         Text.langIdScriptRouted(col("__t"), col("__sc")).as("lang"),
         Text.qualityScore(col("__t")).as("score"))
-      .localCheckpoint()
+      .transform(Pins.pin(_))
     val kept = Text.adaptiveQualityFilterScored(scored, "doc_id", "lang",
       q = 0.25)
     Text.sampleByMixture(kept, "lang", "doc_id", alpha = 0.5, budget = 300.0)
@@ -1064,14 +1064,14 @@ object Pipeline {
   def mmDecode(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     Multimodal.decodeImages(s, Multimodal.synthesizePngs(s, docs, "doc_id"), "doc_id")
-      .localCheckpoint(eager = false)
+      .transform(Pins.pin(_, eager = false))
       .orderBy("doc_id")
   }
 
   def mmAudio(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     Multimodal.decodeAudio(s, Multimodal.synthesizeWavs(s, docs, "doc_id"), "doc_id")
-      .localCheckpoint(eager = false)
+      .transform(Pins.pin(_, eager = false))
       .orderBy("doc_id")
   }
 
@@ -1082,7 +1082,7 @@ object Pipeline {
   def mmVideo(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     Multimodal.decodeFrames(s, Multimodal.synthesizeGifs(s, docs, "doc_id"), "doc_id", stride = 2)
-      .localCheckpoint(eager = false)
+      .transform(Pins.pin(_, eager = false))
       .orderBy("doc_id", "frame_idx")
   }
 
@@ -1861,10 +1861,10 @@ object Pipeline {
       .agg(count(lit(1)).as("n_docs"), round(avg(col("quality")), 6).as("avg_quality"))
     // the consecutive-doc self-join materializes ONCE (lazy barrier):
     // its three consumers — the emptiness gate plus both graph legs —
-    // would otherwise each replay the corpus-sized join (and the legs'
-    // internal barriers then copy blocks instead of recomputing)
+    // would otherwise each replay the corpus-sized join; the legs read
+    // this one pin in place (their edge barriers are bare projections)
     val edges = hostEdges(docs.select("doc_id", "source"))
-      .localCheckpoint(eager = false)
+      .transform(Pins.pin(_, eager = false))
     // an edgeless graph (single-source corpus) is a legal input to the
     // SCORECARD even though pageRank alone refuses it: the oracle — and
     // the NULL-authority contract above — still emit one row per host,
@@ -2035,7 +2035,7 @@ object Pipeline {
     val probed = mhixMaintainer(s, minhashIndexPath(s, dir))
       .probe(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text",
         threshold = 0.8, maxBucket = -1)
-      .select("id_a", "id_b").localCheckpoint()
+      .select("id_a", "id_b").transform(Pins.pin(_))
     val reband = Dedup.minhashLsh(docs, "doc_id", "text", k = 3,
         numPerm = 64, bands = 16, threshold = 0.8, maxBucket = -1)
       .filter(touches).select("id_a", "id_b")
@@ -2085,7 +2085,7 @@ object Pipeline {
     val probed = mhixMaintainer(s, minhashIndexIncPath(s, dir))
       .probe(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text",
         threshold = 0.8, maxBucket = -1)
-      .select("id_a", "id_b").localCheckpoint()
+      .select("id_a", "id_b").transform(Pins.pin(_))
     val reband = Dedup.minhashLsh(docs, "doc_id", "text", k = 3,
         numPerm = 64, bands = 16, threshold = 0.8, maxBucket = -1)
       .filter(touches).select("id_a", "id_b")
@@ -2480,7 +2480,7 @@ object Pipeline {
     // cached state instead of forcing the second probe to re-read it
     val m = new graft.sources.LineIndex.Maintainer(s, p)
     val r1 = m.probe(lined.filter(col("doc_id") % 6 === 0), "doc_id", "text")
-      .localCheckpoint()
+      .transform(Pins.pin(_))
     m.append(r1, "text_dedup")
     val r2 = m.probe(lined.filter(col("doc_id") % 6 === 3), "doc_id", "text")
     r1.unionByName(r2).orderBy("doc_id")
@@ -2710,7 +2710,7 @@ object Pipeline {
       .select(col("doc_id"),
         array_join(filter(col("__ls"),
           l => graft.ops.Text.keepLine(l)), "\n").as("text"))
-      .localCheckpoint(eager = false)
+      .transform(Pins.pin(_, eager = false))
     val survivors = cleaned
       .withColumn("__keep",
         graft.ops.Text.gopherPass(col("text"), minWords = 10) &&

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Pins}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -126,20 +126,20 @@ object HammingIndex {
     */
   private def appendWith(s: SparkSession, path: String,
                          batch: DataFrame, idCol: String, hashCol: String,
-                         pieces: Int, nOld: Long): (Seq[Row], Seq[Row], Long) = {
-    val bdocs = batch
-      .select(col(idCol).as("id"), col(hashCol).cast("long").as("h"))
-      .filter(col("h").isNotNull)
-      .localCheckpoint() // three consumers: doc rows, postings, count
-    val docRows = StatsManifest.append(bdocs, s"$path/docs", "h", nFiles = 4)
-    val distinctH = bdocs.select(col("h").as("__h")).distinct()
-    val postRows = StatsManifest.append(chunkKeys(distinctH, pieces),
-      s"$path/postings", "key", nFiles = 4)
-    val nHashes = nOld + distinctH.count()
-    writeParams(s, path, pieces, nHashes)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(bdocs)
-    (docRows, postRows, nHashes)
-  }
+                         pieces: Int, nOld: Long): (Seq[Row], Seq[Row], Long) =
+    Pins.scope("HammingIndex.append") {
+      val bdocs = batch
+        .select(col(idCol).as("id"), col(hashCol).cast("long").as("h"))
+        .filter(col("h").isNotNull)
+        .transform(Pins.pin(_)) // three consumers: doc rows, postings, count
+      val docRows = StatsManifest.append(bdocs, s"$path/docs", "h", nFiles = 4)
+      val distinctH = bdocs.select(col("h").as("__h")).distinct()
+      val postRows = StatsManifest.append(chunkKeys(distinctH, pieces),
+        s"$path/postings", "key", nFiles = 4)
+      val nHashes = nOld + distinctH.count()
+      writeParams(s, path, pieces, nHashes)
+      (docRows, postRows, nHashes)
+    }
 
   /** Logical deletes by id ([[MinhashIndex.delete]]'s contract):
     * tombstones drop history ids at the docs-expansion step of every
@@ -193,21 +193,16 @@ object HammingIndex {
     * hash count, < 0 unlimited); the guard counts HISTORY distinct-hash
     * fan-out per probed key, the batch-internal pass inherits the same
     * cap, and dist-0 pairs bypass both (the direct equality path).
+    *
+    * The probe bands on the maxDist+1 most selective chunk positions
+    * only, which is exact only when `maxBucket < 0`: with a cap active,
+    * a pair whose every retained position is over cap is dropped, even
+    * when a position the probe did not retain would have paired it.
+    * The probe's pins belong to the caller's scope ([[graft.ops.Pins]]).
     */
   def probe(s: SparkSession, path: String,
             batch: DataFrame, idCol: String, hashCol: String,
-            maxDist: Int, maxBucket: Int = 0): DataFrame =
-    probeReleasable(s, path, batch, idCol, hashCol, maxDist, maxBucket)._1
-
-  /** [[probe]] plus its internal checkpoints for explicit release (the
-    * batch frame and, when a cap is active, the batch-internal pass's
-    * hash-group checkpoint) — the [[MinhashIndex.probeReleasable]]
-    * discipline for long-running maintainers.
-    */
-  def probeReleasable(s: SparkSession, path: String,
-                      batch: DataFrame, idCol: String, hashCol: String,
-                      maxDist: Int,
-                      maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) = {
+            maxDist: Int, maxBucket: Int = 0): DataFrame = {
     val p = readParams(s, path)
     probeCore(s, path, batch, idCol, hashCol, maxDist, maxBucket,
       p.getInt(0), p.getLong(1),
@@ -216,7 +211,7 @@ object HammingIndex {
   }
 
   /** The probe body with params + manifest ROWS supplied by the caller
-    * ([[probeReleasable]] collects them fresh — file-count-sized
+    * ([[probe]] collects them fresh — file-count-sized
     * driver metadata; [[Maintainer]] serves them from its cache).
     * File pruning over the rows is pure driver Scala
     * ([[StatsManifest.pruneLocal]]) — the r12 probe-floor fix: the two
@@ -228,7 +223,7 @@ object HammingIndex {
                         maxDist: Int, maxBucket: Int,
                         pieces: Int, nHashes: Long,
                         postRows: Seq[Row],
-                        docRows: Seq[Row]): (DataFrame, Seq[DataFrame]) = {
+                        docRows: Seq[Row]): DataFrame = {
     require(maxDist >= 0 && maxDist < pieces,
       "pigeonhole banding needs maxDist < pieces")
     val width = 64 / pieces
@@ -239,7 +234,7 @@ object HammingIndex {
     val b = batch
       .select(col(idCol).as("__bid"), col(hashCol).cast("long").as("__bh"))
       .filter(col("__bh").isNotNull)
-      .localCheckpoint() // consumers: chunk keys, dist-0 path, id expansion
+      .transform(Pins.pin(_)) // consumers: chunk keys, dist-0 path, id expansion
     val bh = b.select(col("__bh").as("__h")).distinct()
     val bkeysAll = chunkKeys(bh, pieces)
       .select(col("key"), col("__h").as("__bh"))
@@ -249,7 +244,8 @@ object HammingIndex {
     // maxDist+1 retained positions at least one chunk is equal —
     // banding on maxDist+1 positions is complete, and the exact
     // popcount verify below removes every extra candidate, so the
-    // output set is INDEPENDENT of which positions are retained.
+    // uncapped output set is INDEPENDENT of which positions are
+    // retained (a cap breaks that: see the probe doc).
     // Retain the most selective ones: a position where few distinct
     // chunk values cover the whole batch (a near-constant signature
     // region — real phash/simhash populations have them too) is a
@@ -324,7 +320,7 @@ object HammingIndex {
     // the materialized rows instead of re-running the whole
     // candidate+verify pipeline a second time (the r11 eager-dfiles
     // double-compute).
-    val pairsH = banded.unionByName(direct).localCheckpoint()
+    val pairsH = Pins.pin(banded.unionByName(direct))
     val hArr = pairsH.select(col("__h")).distinct().collect()
       .map(_.getAs[Number](0).longValue())
     val dfiles = StatsManifest.pruneLocal(docRows, hArr)
@@ -341,9 +337,9 @@ object HammingIndex {
 
     // batch-internal pairs: the in-flight pass over the (small) batch,
     // same cap regime
-    val (within, withinInternals) = Dedup.hammingPairsReleasable(
+    val within = Dedup.hammingPairs(
       b, "__bid", "__bh", maxDist, pieces, maxBucket = cap)
-    (cross.unionByName(within), Seq(b, pairsH) ++ withinInternals)
+    cross.unionByName(within)
   }
 
   /** Amortizing handle for repeated probe/append cycles against ONE
@@ -365,37 +361,12 @@ object HammingIndex {
     private val docRows = scala.collection.mutable.ArrayBuffer[Row](
       StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq: _*)
 
-    private var probePins: Seq[DataFrame] = Nil
-
-    /** Cached-state probe — same output contract as the object-level
-      * [[HammingIndex.probe]]. Probe-internal checkpoint pins are held
-      * by this handle (the [[LineIndex.Maintainer]] discipline): call
-      * [[releaseProbe]] once the result has materialized, or let the
-      * NEXT probe release them — a long-lived probe loop pins at most
-      * one batch-sized frame, not one per trigger. Consequence: a
-      * probe result reads the pinned blocks lazily, so materialize it
-      * before the next probe/releaseProbe.
+    /** Cached-state probe — same output contract, and the same capped-
+      * regime recall caveat, as the object-level [[HammingIndex.probe]];
+      * its pins belong to the caller's scope ([[graft.ops.Pins]]).
       */
     def probe(batch: DataFrame, idCol: String, hashCol: String,
-              maxDist: Int, maxBucket: Int = 0): DataFrame = {
-      releaseProbe()
-      val (r, pins) =
-        probeReleasable(batch, idCol, hashCol, maxDist, maxBucket)
-      probePins = pins
-      r
-    }
-
-    /** Release the checkpoints pinned by the most recent [[probe]]
-      * (no-op after probeReleasable, whose caller owns its pins).
-      */
-    def releaseProbe(): Unit = {
-      probePins.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
-      probePins = Nil
-    }
-
-    def probeReleasable(batch: DataFrame, idCol: String, hashCol: String,
-                        maxDist: Int,
-                        maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) =
+              maxDist: Int, maxBucket: Int = 0): DataFrame =
       probeCore(s, path, batch, idCol, hashCol, maxDist, maxBucket,
         pieces, nHashes, postRows.toSeq, docRows.toSeq)
 

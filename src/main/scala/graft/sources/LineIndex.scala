@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.ops.Pins
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -86,34 +87,34 @@ object LineIndex {
     VersionedDir.read(s, s"$path/params").head()
 
   /** One pass over the history corpus (the exploded non-blank lines
-    * localCheckpoint, the prepareLineHistory discipline) feeds the
+    * pinned, the prepareLineHistory discipline) feeds the
     * digest layout and the Bloom; n_lines comes from the stored
     * layout's footer counts.
     */
   def build(history: DataFrame, textCol: String, path: String,
             delim: String = "\n", numBits: Long = 1L << 23,
-            numHashes: Int = 5, nFiles: Int = 0): Unit = {
-    val s = history.sparkSession
-    val lines = linesOf(history, textCol, delim).localCheckpoint()
-    // nFiles <= 0 derives the layout width from the data (guide-§6 file
-    // sizing): ~256k digest rows (~10 MB) per range file, floored at 8
-    // for pruning granularity, capped at 512 per build. A fixed 64 was
-    // tuned for neither end — tiny histories paid 64 file commits +
-    // 64-file probe listings, huge ones got under-split files.
-    val nf = if (nFiles > 0) nFiles
-      else math.max(8L, math.min(512L, lines.count() / 262144L + 1L)).toInt
-    StatsManifest.write(digestsOf(lines), s"$path/digests", "xx", nf)
-    val bf = bloomOf(lines, numBits, numHashes)
-    // n_lines = Σ manifest n_rows — the stats pass already counted the
-    // distinct digests; re-reading the whole layout for a count was a
-    // second full scan of what was just written
-    val nLines = StatsManifest.manifest(s, s"$path/digests")
-      .agg(coalesce(sum(col("n_rows")), lit(0L)).as("n"))
-      .head().getLong(0)
-    writeBloom(s, path, bf)
-    writeParams(s, path, numHashes, nLines)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(lines)
-  }
+            numHashes: Int = 5, nFiles: Int = 0): Unit =
+    Pins.scope("LineIndex.build") {
+      val s = history.sparkSession
+      val lines = Pins.pin(linesOf(history, textCol, delim))
+      // nFiles <= 0 derives the layout width from the data (guide-§6 file
+      // sizing): ~256k digest rows (~10 MB) per range file, floored at 8
+      // for pruning granularity, capped at 512 per build. A fixed 64 was
+      // tuned for neither end — tiny histories paid 64 file commits +
+      // 64-file probe listings, huge ones got under-split files.
+      val nf = if (nFiles > 0) nFiles
+        else math.max(8L, math.min(512L, lines.count() / 262144L + 1L)).toInt
+      StatsManifest.write(digestsOf(lines), s"$path/digests", "xx", nf)
+      val bf = bloomOf(lines, numBits, numHashes)
+      // n_lines = Σ manifest n_rows — the stats pass already counted the
+      // distinct digests; re-reading the whole layout for a count was a
+      // second full scan of what was just written
+      val nLines = StatsManifest.manifest(s, s"$path/digests")
+        .agg(coalesce(sum(col("n_rows")), lit(0L)).as("n"))
+        .head().getLong(0)
+      writeBloom(s, path, bf)
+      writeParams(s, path, numHashes, nLines)
+    }
 
   /** [[graft.ops.Text.dedupLinesIncremental]] output contract for the
     * batch docs: (idCol, n_lines, n_removed_history, n_removed_batch,
@@ -131,28 +132,20 @@ object LineIndex {
     * (maybes-bounded, keeping the duplicate-row immunity) — no driver
     * collect at any batch size.
     *
-    * One-shot lifetime caveat (same as dedupLinesIncremental's one-shot
-    * form): the dup-heavy path's maybes-bounded `present` frame rides a
-    * localCheckpoint that stays pinned until the RESULT frame is GC'd —
-    * fine for a single probe, but a long-lived probe loop should use a
-    * [[Maintainer]], whose [[Maintainer.releaseProbe]] hands the pin to
-    * the caller's release lifecycle (r13 ADVICE).
+    * The dup-heavy path's maybes-bounded `present` frame is a pin the
+    * result reads; it belongs to the caller's scope ([[graft.ops.Pins]]).
     */
   def probe(s: SparkSession, path: String, batch: DataFrame,
             idCol: String, textCol: String, delim: String = "\n",
             maxCollect: Int = 200000): DataFrame =
     probeCore(s, path, batch, idCol, textCol, delim, maxCollect,
       readParams(s, path).getInt(0), readBloom(s, path),
-      StatsManifest.manifest(s, s"$path/digests").collect().toIndexedSeq)._1
+      StatsManifest.manifest(s, s"$path/digests").collect().toIndexedSeq)
 
-  /** Returns (probe result, the dup-heavy path's pinned checkpoint —
-    * None on the fast/empty paths). The pin must outlive the result's
-    * materialization; releasing it is the caller's job.
-    */
   private def probeCore(s: SparkSession, path: String, batch: DataFrame,
                         idCol: String, textCol: String, delim: String,
                         maxCollect: Int, numHashes: Int, bloom: Array[Byte],
-                        mrows: Seq[Row]): (DataFrame, Option[DataFrame]) = {
+                        mrows: Seq[Row]): DataFrame = {
     import graft.functions.FunctionDefs.call
     // the maybe minority: distinct bloom-positive batch lines,
     // materialized once (it feeds the count, then one of two paths)
@@ -161,7 +154,7 @@ object LineIndex {
         lit(numHashes)))
       .select(xxhash64(col("__l")).as("xx"), md5(col("__l")).as("__hh"))
       .distinct()
-      .localCheckpoint()
+      .transform(Pins.pin(_))
     // ONE limit-collect replaces the former count()-then-collect() pair
     // (two jobs per probe): <= maxCollect rows back means we hold the
     // COMPLETE maybe set (limit returned everything there was) and the
@@ -172,41 +165,40 @@ object LineIndex {
     val sample = maybesDf.limit(maxCollect + 1).collect()
     val empty = s.read.parquet(s"$path/digests").filter(lit(false))
       .select(col("hh").as("__hh"))
-    val (present, pinned) =
+    val present =
       if (sample.isEmpty) {
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(maybesDf)
-        (empty, None)
+        Pins.release(maybesDf)
+        empty
       } else if (sample.length <= maxCollect) {
         // fast path: driver-side file pruning, zero metadata jobs
         val maybes = sample
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(maybesDf)
+        Pins.release(maybesDf)
         val files = StatsManifest.pruneLocal(mrows, maybes.map(_.getLong(0)))
-        if (files.isEmpty) (empty, None)
+        if (files.isEmpty) empty
         else {
           import s.implicits._
           val keys = maybes.map(_.getString(1)).toSeq.toDF("__hh")
           // semi + distinct: ≤ one row per maybe reaches the membership
           // join, whatever duplicate rows replayed appends left behind
-          (s.read.parquet(files.toIndexedSeq: _*).select(col("hh").as("__hh"))
+          s.read.parquet(files.toIndexedSeq: _*).select(col("hh").as("__hh"))
             .join(broadcast(keys), Seq("__hh"), "left_semi")
-            .distinct(), None)
+            .distinct()
         }
       } else {
         // dup-heavy path: distributed end to end; materialize the
         // (maybes-bounded) present set so the checkpointed maybe frame
-        // releases before the main dedup job — the present checkpoint
-        // itself is the returned pin
+        // releases before the main dedup job — the present pin itself
+        // belongs to the caller's scope
         val p = s.read.parquet(s"$path/digests").select(col("hh").as("__hh"))
           .join(maybesDf.select("__hh"), Seq("__hh"), "left_semi")
           .distinct()
-          .localCheckpoint()
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(maybesDf)
-        (p, Some(p))
+          .transform(Pins.pin(_))
+        Pins.release(maybesDf)
+        p
       }
     val state = graft.ops.Text.lineHistoryFrom(
       bloom, present.withColumn("__seen", lit(1)), numHashes)
-    (graft.ops.Text.dedupLinesIncremental(state, batch, idCol, textCol, delim),
-      pinned)
+    graft.ops.Text.dedupLinesIncremental(state, batch, idCol, textCol, delim)
   }
 
   /** Fold a probed batch's KEPT output back in — pass the probe result
@@ -227,21 +219,21 @@ object LineIndex {
   private def appendCore(s: SparkSession, path: String, kept: DataFrame,
                          textCol: String, delim: String, nFiles: Int,
                          numHashes: Int, old: Array[Byte], nLines: Long)
-      : (Seq[Row], Array[Byte], Long) = {
-    val lines = linesOf(kept, textCol, delim).localCheckpoint()
-    val fresh = StatsManifest.append(digestsOf(lines), s"$path/digests", "xx", nFiles)
-    val bf = bloomOf(lines, old.length.toLong * 8L, numHashes)
-    require(bf.length == old.length,
-      s"LineIndex.append: filter geometry drift (${bf.length} vs ${old.length} bytes)")
-    val merged = new Array[Byte](old.length)
-    var i = 0
-    while (i < merged.length) { merged(i) = (old(i) | bf(i)).toByte; i += 1 }
-    val n = nLines + fresh.map(_.getAs[Long]("n_rows")).sum
-    writeBloom(s, path, merged)
-    writeParams(s, path, numHashes, n)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(lines)
-    (fresh, merged, n)
-  }
+      : (Seq[Row], Array[Byte], Long) =
+    Pins.scope("LineIndex.append") {
+      val lines = Pins.pin(linesOf(kept, textCol, delim))
+      val fresh = StatsManifest.append(digestsOf(lines), s"$path/digests", "xx", nFiles)
+      val bf = bloomOf(lines, old.length.toLong * 8L, numHashes)
+      require(bf.length == old.length,
+        s"LineIndex.append: filter geometry drift (${bf.length} vs ${old.length} bytes)")
+      val merged = new Array[Byte](old.length)
+      var i = 0
+      while (i < merged.length) { merged(i) = (old(i) | bf(i)).toByte; i += 1 }
+      val n = nLines + fresh.map(_.getAs[Long]("n_rows")).sum
+      writeBloom(s, path, merged)
+      writeParams(s, path, numHashes, n)
+      (fresh, merged, n)
+    }
 
   /** Re-cluster the digest layout — the lakehouse OPTIMIZE step that
     * completes the lifecycle: appends land delta files whose xx ranges
@@ -257,16 +249,16 @@ object LineIndex {
     * like every maintenance op here; invalidates live [[Maintainer]]s
     * (their cached manifest rows name the pre-compaction files).
     */
-  def compact(s: SparkSession, path: String, nFiles: Int = 64): Unit = {
-    val numHashes = readParams(s, path).getInt(0)
-    val clean = s.read.parquet(s"$path/digests")
-      .dropDuplicates("hh")
-      .localCheckpoint() // the write overwrites its own input dir
-    StatsManifest.write(clean, s"$path/digests", "xx", nFiles)
-    val n = s.read.parquet(s"$path/digests").count()
-    writeParams(s, path, numHashes, n)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(clean)
-  }
+  def compact(s: SparkSession, path: String, nFiles: Int = 64): Unit =
+    Pins.scope("LineIndex.compact") {
+      val numHashes = readParams(s, path).getInt(0)
+      val clean = s.read.parquet(s"$path/digests")
+        .dropDuplicates("hh")
+        .transform(Pins.pin(_)) // the write overwrites its own input dir
+      StatsManifest.write(clean, s"$path/digests", "xx", nFiles)
+      val n = s.read.parquet(s"$path/digests").count()
+      writeParams(s, path, numHashes, n)
+    }
 
   /** Amortizing handle for repeated probe/append cycles against ONE
     * index — the streaming-maintenance shape ([[MinhashIndex.Maintainer]]'s
@@ -290,42 +282,14 @@ object LineIndex {
     private val mrows = scala.collection.mutable.ArrayBuffer[Row](
       StatsManifest.manifest(s, s"$path/digests").collect().toIndexedSeq: _*)
 
-    private var probePin: Option[DataFrame] = None
-
-    /** Cached-state [[LineIndex.probe]] — same output contract. The
-      * dup-heavy path's checkpoint pin is held by this handle: call
-      * [[releaseProbe]] once the result has materialized, or let the
-      * NEXT probe release it (by which point the stream contract says
-      * the previous result was consumed) — either way a long-lived
-      * probe loop pins at most one maybes-bounded frame, not one per
-      * trigger (r13 ADVICE). HARD consequence of that contract: a
-      * probe result from the dup-heavy path reads the pinned blocks
-      * and localCheckpoint truncates lineage, so materializing probe
-      * N's result AFTER issuing probe N+1 fails unrecoverably
-      * (checkpoint block not found — there is nothing to recompute
-      * from). Consume each probe's result before the next probe, as
-      * [[graft.streaming.LineDupStream]] does; fast-path probes
-      * (maybes ≤ maxCollect) pin nothing and are unaffected — which is
-      * why misuse only surfaces on dup-heavy batches at scale.
+    /** Cached-state [[LineIndex.probe]] — same output contract; the
+      * dup-heavy path's pin belongs to the caller's scope
+      * ([[graft.ops.Pins]]).
       */
     def probe(batch: DataFrame, idCol: String, textCol: String,
-              delim: String = "\n", maxCollect: Int = 200000): DataFrame = {
-      releaseProbe()
-      val (r, pin) = probeCore(s, path, batch, idCol, textCol, delim,
+              delim: String = "\n", maxCollect: Int = 200000): DataFrame =
+      probeCore(s, path, batch, idCol, textCol, delim,
         maxCollect, numHashes, bloomBytes, mrows.toSeq)
-      probePin = pin
-      r
-    }
-
-    /** Release the checkpoint blocks pinned by the most recent probe
-      * (no-op when the fast path ran). Only call after that probe's
-      * result frame has been materialized — the result plan reads the
-      * pinned blocks.
-      */
-    def releaseProbe(): Unit = {
-      probePin.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
-      probePin = None
-    }
 
     /** Cached-state [[LineIndex.append]] — extends the in-memory
       * manifest/bloom from the delta it just wrote.

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Pins}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -140,28 +140,26 @@ object MinhashIndex {
   private def appendWith(s: SparkSession, path: String,
                          batch: DataFrame, idCol: String, textCol: String,
                          k: Int, numPerm: Int, bands: Int, seed: Long,
-                         nDocsOld: Long): (Seq[Row], Seq[Row], Long) = {
-    val withSig = Dedup.sigFrame(batch, idCol, textCol, k, numPerm, seed)
-      .localCheckpoint() // two consumers: docs rows + postings
-    val docRows = StatsManifest.append(
-      withSig.select(col(idCol).as("id"), col("__sh").as("sh")),
-      s"$path/docs", "id", nFiles = 4)
-    val postRows = StatsManifest.append(
-      Dedup.bandKeyRows(withSig, idCol, numPerm, bands)
-        .select(combinedKey(col("__band"), col("__bkey")).as("key"),
-          col(idCol).as("id")),
-      s"$path/postings", "key", nFiles = 8)
-    val nDocs = nDocsOld + withSig.count()
-    // params LAST: a crash before this line leaves both manifests
-    // committed and only n_docs stale (computed-cap skew, healed by
-    // the replayed append)
-    writeParams(s, path, k, numPerm, bands, seed, nDocs)
-    // everything derived from the checkpoint is written out — release
-    // its blocks so a daily/streaming maintainer doesn't pin one
-    // batch-sized checkpoint per append (the CcStream discipline)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(withSig)
-    (docRows, postRows, nDocs)
-  }
+                         nDocsOld: Long): (Seq[Row], Seq[Row], Long) =
+    Pins.scope("MinhashIndex.append") {
+      // two consumers: docs rows + postings, both written out before the
+      // scope releases the pin
+      val withSig = Pins.pin(Dedup.sigFrame(batch, idCol, textCol, k, numPerm, seed))
+      val docRows = StatsManifest.append(
+        withSig.select(col(idCol).as("id"), col("__sh").as("sh")),
+        s"$path/docs", "id", nFiles = 4)
+      val postRows = StatsManifest.append(
+        Dedup.bandKeyRows(withSig, idCol, numPerm, bands)
+          .select(combinedKey(col("__band"), col("__bkey")).as("key"),
+            col(idCol).as("id")),
+        s"$path/postings", "key", nFiles = 8)
+      val nDocs = nDocsOld + withSig.count()
+      // params LAST: a crash before this line leaves both manifests
+      // committed and only n_docs stale (computed-cap skew, healed by
+      // the replayed append)
+      writeParams(s, path, k, numPerm, bands, seed, nDocs)
+      (docRows, postRows, nDocs)
+    }
 
   /** Logical deletes — takedowns/retention against the indexed
     * history, the [[AnnLayout.delete]] contract on the text side: ids
@@ -231,24 +229,11 @@ object MinhashIndex {
     * or run through a [[Maintainer]], which caches params + manifests
     * across probes and extends them in memory on append.
     *
-    * The returned frame references a batch-signature localCheckpoint;
-    * one-shot callers can rely on the ContextCleaner to reclaim it,
-    * long-running maintainers use [[probeReleasable]] and free the
-    * internals once the result is materialized (the
-    * mergeComponentsReleasable pattern).
+    * The probe's pins belong to the caller's scope ([[graft.ops.Pins]]).
     */
   def probe(s: SparkSession, path: String,
             batch: DataFrame, idCol: String, textCol: String,
-            threshold: Double = 0.8, maxBucket: Int = 0): DataFrame =
-    probeReleasable(s, path, batch, idCol, textCol, threshold, maxBucket)._1
-
-  /** [[probe]] plus its internal checkpoints for explicit release: the
-    * batch-signature frame AND (when a cap is active) the batch-
-    * internal LSH pass's band-key checkpoint.
-    */
-  def probeReleasable(s: SparkSession, path: String,
-                      batch: DataFrame, idCol: String, textCol: String,
-                      threshold: Double = 0.8, maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) = {
+            threshold: Double = 0.8, maxBucket: Int = 0): DataFrame = {
     val p = readParams(s, path)
     probeCore(s, path, batch, idCol, textCol, threshold, maxBucket,
       p.getInt(0), p.getInt(1), p.getInt(2), p.getLong(3), p.getLong(4),
@@ -257,7 +242,7 @@ object MinhashIndex {
   }
 
   /** The probe body with params + manifest ROWS supplied by the caller
-    * ([[probeReleasable]] collects them fresh — file-count-sized
+    * ([[probe]] collects them fresh — file-count-sized
     * driver metadata; [[Maintainer]] serves them from its cache). File
     * pruning over the rows is pure driver Scala
     * ([[StatsManifest.pruneLocal]]) — the r12 probe-floor fix.
@@ -267,14 +252,13 @@ object MinhashIndex {
                         threshold: Double, maxBucket: Int,
                         k: Int, numPerm: Int, bands: Int, seed: Long,
                         nDocs: Long, postRows: Seq[Row],
-                        docRows: Seq[Row]): (DataFrame, Seq[DataFrame]) = {
+                        docRows: Seq[Row]): DataFrame = {
     val cap =
       if (maxBucket == 0) Dedup.defaultMaxBucket(nDocs) else maxBucket
 
     // batch signatures once (two consumers: band keys + verify shingles)
-    val bsig = Dedup.sigFrame(batch, idCol, textCol, k, numPerm, seed)
-      .select(col(idCol).as("__bid"), col("__sh").as("__bsh"), col("__sig"))
-      .localCheckpoint()
+    val bsig = Pins.pin(Dedup.sigFrame(batch, idCol, textCol, k, numPerm, seed)
+      .select(col(idCol).as("__bid"), col("__sh").as("__bsh"), col("__sig")))
     val bkeys = Dedup.bandKeyRows(bsig, "__bid", numPerm, bands)
       .select(combinedKey(col("__band"), col("__bkey")).as("key"),
         col("__bid"))
@@ -318,7 +302,7 @@ object MinhashIndex {
     val cands = guarded.join(broadcast(bkeys), "key")
       .filter(col("id") =!= col("__bid"))
       .select(col("id").as("__hid"), col("__bid")).distinct()
-      .localCheckpoint()
+      .transform(Pins.pin(_))
 
     // history shingles for candidate ids only: docs-manifest pruning on
     // the id ranges (driver-side over the cached rows), then a
@@ -343,14 +327,11 @@ object MinhashIndex {
         greatest(col("__hid"), col("__bid")).as("id_b"), col("jaccard"))
 
     // batch-internal pairs: the plain in-flight pass over the (small)
-    // batch — a second signature evaluation of batch-sized cost only.
-    // Releasable form: with a cap active the pass checkpoints its band
-    // keys, which would otherwise leak one posting-sized frame per
-    // trigger in a long-running maintainer (the r10 ADVICE leak)
-    val (within, withinInternals) = Dedup.minhashLshReleasable(
+    // batch — a second signature evaluation of batch-sized cost only
+    val within = Dedup.minhashLsh(
       batch, idCol, textCol, k = k, numPerm = numPerm, bands = bands,
       threshold = threshold, seed = seed, maxBucket = cap)
-    (crossPairs.unionByName(within), Seq(bsig, cands) ++ withinInternals)
+    crossPairs.unionByName(within)
   }
 
   /** Amortizing handle for repeated probe/append cycles against ONE
@@ -379,37 +360,12 @@ object MinhashIndex {
     private val docRows = scala.collection.mutable.ArrayBuffer[Row](
       StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq: _*)
 
-    private var probePins: Seq[DataFrame] = Nil
-
     /** Cached-state probe — same output contract as the object-level
-      * [[MinhashIndex.probe]]. The batch-signature checkpoint pins are
-      * held by this handle (the [[LineIndex.Maintainer]] discipline):
-      * call [[releaseProbe]] once the result has materialized, or let
-      * the NEXT probe release them — a long-lived probe loop pins at
-      * most one batch-sized signature frame, not one per trigger.
-      * Consequence: a probe result reads the pinned blocks lazily, so
-      * materialize it before the next probe/releaseProbe.
+      * [[MinhashIndex.probe]]; its pins belong to the caller's scope
+      * ([[graft.ops.Pins]]).
       */
     def probe(batch: DataFrame, idCol: String, textCol: String,
-              threshold: Double = 0.8, maxBucket: Int = 0): DataFrame = {
-      releaseProbe()
-      val (r, pins) =
-        probeReleasable(batch, idCol, textCol, threshold, maxBucket)
-      probePins = pins
-      r
-    }
-
-    /** Release the checkpoints pinned by the most recent [[probe]]
-      * (no-op after probeReleasable, whose caller owns its pins).
-      */
-    def releaseProbe(): Unit = {
-      probePins.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
-      probePins = Nil
-    }
-
-    def probeReleasable(batch: DataFrame, idCol: String, textCol: String,
-                        threshold: Double = 0.8,
-                        maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) =
+              threshold: Double = 0.8, maxBucket: Int = 0): DataFrame =
       probeCore(s, path, batch, idCol, textCol, threshold, maxBucket,
         k, numPerm, bands, seed, nDocs, postRows.toSeq, docRows.toSeq)
 

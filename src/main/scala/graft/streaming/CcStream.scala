@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Pins}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * `foreachBatch`, not a stateful operator: the fold is a multi-stage
   * batch job (semi-join probe, label-level CC, broadcast relabel) —
   * the same reasoning as [[graft.sources.AnnLayout.appendStream]].
-  * Each trigger's result is localCheckpoint'd so lineage stays O(1)
-  * across micro-batches (the connectedComponents round trick).
+  * Each trigger's result is pinned so lineage stays O(1) across
+  * micro-batches (the connectedComponents round trick).
   * Deterministic: labels after any prefix of batches equal the batch
   * [[graft.ops.Dedup.connectedComponents]] over the union of all
   * edges seen so far (StreamingSpec pins it across triggers).
@@ -24,32 +24,26 @@ import org.apache.spark.sql.functions._
 final class CcStream(initial: DataFrame) {
 
   @volatile private var state: DataFrame =
-    initial.select(col("id"), col("comp")).localCheckpoint()
+    Pins.pin(initial.select(col("id"), col("comp")), rolling = true)
 
-  /** The current labeling (id, comp). VALID ONLY UNTIL THE NEXT
-    * [[fold]]: each fold unpersists the superseded labels checkpoint,
-    * and a local checkpoint cannot recompute — an action on a stale
-    * reference (or a read racing a concurrent fold) fails with missing
-    * blocks. Consumers that must hold a labeling across triggers
-    * snapshot it first (collect a bounded slice, or write it out).
+  /** The current labeling (id, comp): a rolling pin, VALID ONLY UNTIL
+    * THE NEXT [[fold]] releases it (the [[graft.ops.Pins]] contract).
+    * Consumers that must hold a labeling across triggers snapshot it
+    * first (collect a bounded slice, or write it out).
     */
   def labels: DataFrame = state
 
   /** Fold one micro-batch of edges; returns the new labeling. The
-    * superseded labels checkpoint AND the merge's internal checkpoints
-    * (edge frame, endpoint map, merged-root map — released via
-    * [[graft.ops.Dedup.mergeComponentsReleasable]]) are all freed once
-    * the new labeling is materialized, so a long-running stream holds
-    * ONE labels copy, not four cached frames per trigger. The flip
-    * side is the [[labels]] invalidation contract above: previously
-    * returned labelings are dead after this call.
+    * merge's own pins release with the fold's scope and the superseded
+    * labeling right after, so a long-running stream holds ONE labels
+    * copy.
     */
   def fold(edges: DataFrame): DataFrame = synchronized {
     val prev = state
-    val (next, internals) = Dedup.mergeComponentsReleasable(prev, edges)
-    state = next.localCheckpoint()
-    (internals :+ prev).foreach(
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
+    state = Pins.scope("CcStream.fold") {
+      Pins.pin(Dedup.mergeComponents(prev, edges), rolling = true)
+    }
+    Pins.release(prev)
     state
   }
 

@@ -1,40 +1,38 @@
 package graft.streaming
 
+import graft.ops.Pins
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** The probe → fold → append micro-batch lifecycle shared by
   * [[NearDupStream]] (MinHash index) and [[SigDupStream]] (Hamming
-  * index), parameterized over the index maintainer's two operations so
-  * the release discipline lives in ONE place:
+  * index), parameterized over the index maintainer's two operations:
   *
-  *  - the batch is localCheckpoint'd so probe and append see one frame;
+  *  - the batch is pinned so probe and append see one frame;
   *  - probe runs BEFORE append (a batch never pairs with itself twice);
-  *  - the fold materializes the new labeling (CcStream localCheckpoints
-  *    it) before append mutates the maintainer's cached metadata;
-  *  - every per-trigger checkpoint — probe internals plus the batch —
-  *    is released once the fold has materialized, so a long-running
-  *    stream holds ONE labels copy, nothing batch-sized.
+  *  - the fold materializes the new labeling before append mutates the
+  *    maintainer's cached metadata;
+  *  - each trigger is one [[graft.ops.Pins.scope]]: the batch and every
+  *    probe and fold pin release when it ends, so a long-running stream
+  *    holds ONE labels copy, nothing batch-sized.
   *
-  * `probeReleasable` must return the found pairs (id_a, id_b, ...) plus
-  * its internal checkpoints for release; `append` must extend the index
-  * with the batch.
+  * `probe` must return the found pairs (id_a, id_b, ...); `append` must
+  * extend the index with the batch.
   */
 private[streaming] final class DupStreamCore(
     cc: CcStream,
-    probeReleasable: DataFrame => (DataFrame, Seq[DataFrame]),
+    probe: DataFrame => DataFrame,
     append: DataFrame => Unit) {
 
   def labels: DataFrame = cc.labels
 
-  def processBatch(batch: DataFrame): DataFrame = {
-    val b = batch.localCheckpoint() // probe and append must see ONE batch
-    val (pairs, internals) = probeReleasable(b)
-    val next = cc.fold(pairs.select(col("id_a"), col("id_b")))
-    append(b)
-    (internals :+ b).foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
-    next
-  }
+  def processBatch(batch: DataFrame): DataFrame =
+    Pins.scope("DupStreamCore.processBatch") {
+      val b = Pins.pin(batch) // probe and append must see ONE batch
+      val next = cc.fold(probe(b).select(col("id_a"), col("id_b")))
+      append(b)
+      next
+    }
 
   def start(rows: DataFrame, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     rows.writeStream

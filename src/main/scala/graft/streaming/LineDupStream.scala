@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Pins
 import graft.sources.LineIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -29,12 +30,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * lines read as history), so exactly-once sinks should key on the
   * batch id as usual.
   *
-  * Per-trigger memory: the batch and its probe result localCheckpoint
-  * (probe and append must see one frame; the result must materialize
-  * before append mutates the index state under it) and release once
-  * the next trigger lands — the stream holds ONE result copy, nothing
-  * history-sized. The cached [[LineIndex.Maintainer]] makes this
-  * stream the index's single writer.
+  * Per-trigger memory: the batch and the probe's pins release with the
+  * trigger's [[graft.ops.Pins.scope]]; the result is a rolling pin (it
+  * must materialize before append mutates the index state under it)
+  * released once the next trigger lands — the stream holds ONE result
+  * copy, nothing history-sized. The cached [[LineIndex.Maintainer]]
+  * makes this stream the index's single writer.
   */
 final class LineDupStream(spark: SparkSession, indexPath: String,
                           idCol: String, textCol: String,
@@ -47,15 +48,13 @@ final class LineDupStream(spark: SparkSession, indexPath: String,
     * deduped batch docs (materialized).
     */
   def processBatch(batch: DataFrame): DataFrame = {
-    val b = batch.localCheckpoint()
-    val r = ix.probe(b, idCol, textCol, delim, maxCollect).localCheckpoint()
-    // r is materialized (eager checkpoint): the dup-heavy probe path's
-    // pinned present-frame blocks release NOW, not at GC (r13 ADVICE)
-    ix.releaseProbe()
-    ix.append(r, "text_dedup", delim)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(b)
-    if (lastResult != null)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(lastResult)
+    val r = Pins.scope("LineDupStream.processBatch") {
+      val b = Pins.pin(batch)
+      val kept = Pins.pin(ix.probe(b, idCol, textCol, delim, maxCollect), rolling = true)
+      ix.append(kept, "text_dedup", delim)
+      kept
+    }
+    if (lastResult != null) Pins.release(lastResult)
     lastResult = r
     r
   }

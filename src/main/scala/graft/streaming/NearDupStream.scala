@@ -39,7 +39,7 @@ final class NearDupStream private (spark: SparkSession, indexPath: String,
   // Maintainer's in-memory manifest extension stays consistent
   private val ix = new MinhashIndex.Maintainer(spark, indexPath)
   private val core = new DupStreamCore(new CcStream(initialLabels),
-    b => ix.probeReleasable(b, idCol, textCol, threshold, maxBucket),
+    b => ix.probe(b, idCol, textCol, threshold, maxBucket),
     b => ix.append(b, idCol, textCol))
 
   /** Current near-dup component labeling (id, comp) — ids that never
@@ -47,13 +47,9 @@ final class NearDupStream private (spark: SparkSession, indexPath: String,
     */
   def labels: DataFrame = core.labels
 
-  /** Probe → fold → append for one batch; returns the new labeling.
-    * Every per-trigger checkpoint (the batch frame, the probe's batch
-    * signatures + capped band keys, append's — released by append
-    * itself) is freed once the fold has materialized the new labeling
-    * and the append has written — a long-running stream holds ONE
-    * labels copy, nothing batch-sized (the [[DupStreamCore]]
-    * lifecycle, end to end).
+  /** Probe → fold → append for one batch; returns the new labeling —
+    * the [[DupStreamCore]] lifecycle: every per-trigger pin releases
+    * with the trigger's scope.
     */
   def processBatch(batch: DataFrame): DataFrame = core.processBatch(batch)
 

@@ -20,14 +20,18 @@ import org.apache.spark.sql.functions._
   * unlimited regime (maxBucket < 0) the labels after ANY prefix of
   * batches are EXACTLY the batch `connectedComponents(hammingPairs(…))`
   * over everything seen — SigDupStreamSpec pins it across triggers.
+  * Only that regime is exact: the probe bands on the maxDist+1 most
+  * selective chunk positions, and with a cap active (the default
+  * maxBucket = 0 computes one) a pair whose every retained position is
+  * over cap is dropped ([[HammingIndex.probe]]).
   *
   * Same structural contracts as [[NearDupStream]]: `foreachBatch`
   * (each step is a multi-stage batch job), probe BEFORE append so a
   * batch never pairs with itself twice, at-least-once delivery
   * (replayed appends duplicate rows — absorbed by the probe's
-  * distincts — and replayed folds are no-op merges), per-trigger
-  * checkpoints released once the fold has materialized, and
-  * [[CcStream.labels]]' invalidation contract on [[labels]].
+  * distincts — and replayed folds are no-op merges), per-trigger pins
+  * released with the trigger's scope, and [[CcStream.labels]]'
+  * invalidation contract on [[labels]].
   */
 final class SigDupStream private (spark: SparkSession, indexPath: String,
                                   idCol: String, hashCol: String,
@@ -39,7 +43,7 @@ final class SigDupStream private (spark: SparkSession, indexPath: String,
   // extension stays consistent
   private val ix = new HammingIndex.Maintainer(spark, indexPath)
   private val core = new DupStreamCore(new CcStream(initialLabels),
-    b => ix.probeReleasable(b, idCol, hashCol, maxDist, maxBucket),
+    b => ix.probe(b, idCol, hashCol, maxDist, maxBucket),
     b => ix.append(b, idCol, hashCol))
 
   /** Current near-dup component labeling (id, comp) — ids that never

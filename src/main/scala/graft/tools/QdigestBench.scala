@@ -74,7 +74,7 @@ object QdigestBench {
               abs(col("r50") - col("n") * 0.5) / col("n"),
               abs(col("r95") - col("n") * 0.95) / col("n")).as("err"))
             .agg(max("err")).head.getDouble(0)
-          org.apache.spark.sql.GraftBridge.unpersistCheckpoint(e)
+          graft.ops.Pins.release(e)
           r
         }
         // materialize the (3-row) estimator outputs ONCE after the
@@ -86,7 +86,7 @@ object QdigestBench {
           col("e50"), col("e95")))
         val errAp = rankErr(apC)
         val stateLongs = qdC.agg(max("state_longs")).head.getInt(0)
-        Seq(qdC, apC).foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
+        Seq(qdC, apC).foreach(graft.ops.Pins.release)
 
         println(f"| $tag ($nAll rows) | qdigest k=4096: ${tQd}%.2f s, " +
           f"state ≤ $stateLongs longs/group, worst rank err ${errQd * 100}%.4f%% " +

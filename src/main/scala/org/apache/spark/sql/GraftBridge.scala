@@ -14,18 +14,6 @@ object GraftBridge {
   def accepts(expected: AbstractDataType, actual: DataType): Boolean =
     expected.acceptsType(actual)
 
-  /** Release the cached blocks behind a `localCheckpoint()`ed frame —
-    * the blocks a long-running incremental maintainer (CcStream) would
-    * otherwise pin once per trigger. No-op for frames that aren't
-    * checkpoint-backed.
-    */
-  def unpersistCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.optimizedPlan.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Catalyst⇄Scala value converters (for user-registered aggregates,
     * whose callbacks speak external Scala types — String, Seq, Row —
     * not UTF8String/ArrayData/InternalRow).
