@@ -18,7 +18,8 @@ object Dedup {
 
   /** Shared `maxBucket` regime encoding for the banded pair operators
     * ([[minhashLsh]], [[hammingPairs]], [[simhashNearDup]],
-    * [[graft.sources.MinhashIndex.probe]]): > 0 = explicit cap,
+    * [[graft.sources.MinhashIndex.probe]]; resolved by
+    * [[Banding.cap]]): > 0 = explicit cap,
     * [[BucketAuto]] (0, the default) = cap computed from the corpus
     * ([[defaultMaxBucket]] / [[defaultMaxBucketFixedWidth]]),
     * [[BucketUnlimited]] (−1, any negative) = no cap — the exact-recall
@@ -94,31 +95,6 @@ object Dedup {
       .drop("__hash")
   }
 
-  /** Shared hot-bucket guard for banded candidate generation: drop
-    * bucket keys holding more than `cap` rows before the self-join (an
-    * m-row bucket yields m² pairs — one boilerplate key would dominate
-    * the job, and AQE can split a partition but not shrink a quadratic
-    * pair count). Over-cap keys are found with a partial-aggregated
-    * count (one row per bucket through the shuffle) and broadcast into
-    * an anti-join; a window count would shuffle every key AND pin each
-    * hot bucket on one task.
-    *
-    * Trade-offs callers accept when setting a cap: (a) recall — a true
-    * near-dup pair whose only shared bucket is over the cap is lost, so
-    * run [[exact]] first (giant buckets are near-always identical
-    * content); (b) cost — the banded frame's lineage is evaluated twice
-    * (once for counts, once as the probe side); persist upstream if the
-    * signature computation dominates.
-    */
-  private def dropOverCapBuckets(banded: DataFrame, keys: Seq[String], cap: Int): DataFrame =
-    if (cap <= 0) banded
-    else {
-      val overCap = banded.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > cap)
-        .select(keys.map(col): _*)
-      banded.join(broadcast(overCap), keys, "left_anti")
-    }
-
   /** Computed bucket-cap default for the banded pair generators — the
     * r9 ANN knob-default pattern ([[Ann.defaultNlist]]) extended to
     * dedup (r10): a bucket of m members emits m²/2 candidate pairs, so
@@ -184,26 +160,6 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") /
       size(array_union(a, b)).cast("double")
 
-  /** MinHash + LSH near-duplicate pairs: shingle → signature → band
-    * buckets → bucket equi-join → exact-Jaccard verify.
-    *
-    * Returns (id_a, id_b, jaccard) for candidate pairs with
-    * jaccard >= threshold. Candidate recall follows the standard LSH
-    * S-curve for `bands` bands of `numPerm/bands` rows.
-    *
-    * `maxBucket` drops band buckets holding more rows than the cap
-    * before the self-join. A bucket of m rows yields m² candidate
-    * pairs — one boilerplate-heavy key at 100 TB would otherwise dominate
-    * the whole job, and AQE can only split a skewed partition, not shrink
-    * the quadratic pair count. Run [[exact]] first: a giant bucket is
-    * near-always identical content, which exact dedup removes for the
-    * cost of a hash. Regimes (r10): maxBucket > 0 explicit cap; 0
-    * (default) the [[defaultMaxBucket]] occupancy cap computed from one
-    * count() over `df` (an extra lineage replay on a derived corpus —
-    * cache upstream or pass an explicit cap, the [[Ann.defaultNlist]]
-    * caveat); < 0 unlimited (the exact-recall regime the CORRECTNESS
-    * entries pin).
-    */
   /** (id, __sh, __sig) — the shared shingle+signature frame for
     * [[minhashLsh]] and the persisted [[graft.sources.MinhashIndex]]:
     * both MUST evaluate the identical expressions, or index probes
@@ -228,12 +184,27 @@ object Dedup {
         hash(slice(col("__sig"), j * r + 1, lit(r))))).as(Seq("__band", "__bkey")))
   }
 
+  /** MinHash + LSH near-duplicate pairs: shingle → signature → band
+    * buckets → bucket equi-join → exact-Jaccard verify.
+    *
+    * Returns (id_a, id_b, jaccard) for candidate pairs with
+    * jaccard >= threshold. Candidate recall follows the standard LSH
+    * S-curve for `bands` bands of `numPerm/bands` rows.
+    *
+    * `maxBucket` caps band buckets before the self-join; run [[exact]]
+    * first, since a giant bucket is near-always identical content.
+    * Regimes: > 0 explicit; 0 (default) the [[defaultMaxBucket]] cap
+    * from one count() over `df` (cache a derived corpus upstream or
+    * pass an explicit cap, the [[Ann.defaultNlist]] caveat); < 0
+    * unlimited, the regime the CORRECTNESS entries pin. Capped recall:
+    * the [[Banding]] contract.
+    */
   def minhashLsh(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numPerm: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, seed: Long = 42, maxBucket: Int = 0): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
-    val cap = if (maxBucket == 0) defaultMaxBucket(df.count()) else maxBucket
+    val cap = Banding.cap(maxBucket, defaultMaxBucket(df.count()))
     val withSig = sigFrame(df, idCol, textCol, k, numPerm, seed)
     // with a cap active the band keys feed TWO consumers (the over-cap
     // count and the probe side) — materialize the (id, band, bkey)
@@ -242,14 +213,7 @@ object Dedup {
     // whole uncapped run on the 50k-doc skew corpus)
     val allBandKeys0 = bandKeyRows(withSig, idCol, numPerm, bands)
     val allBandKeys = if (cap > 0) Pins.pin(allBandKeys0) else allBandKeys0
-    val bandKeys = dropOverCapBuckets(allBandKeys, Seq("__band", "__bkey"), cap)
-    val a = bandKeys.select(col(idCol).as("id_a"), col("__band"), col("__bkey"))
-    val b = bandKeys.select(col(idCol).as("id_b"), col("__band"), col("__bkey"))
-    // self-join: SHUFFLE_HASH makes the two Exchanges canonically equal
-    // so the second is a ReusedExchange — in the uncapped regime (no
-    // checkpoint) the MinHash signature scan runs ONCE, not per side
-    val candidates = a.hint("shuffle_hash").join(b, Seq("__band", "__bkey"))
-      .filter(col("id_a") < col("id_b"))
+    val candidates = Banding.selfPairs(allBandKeys, Seq("__band", "__bkey"), idCol, cap)
       .select("id_a", "id_b").distinct()
     val sh = withSig.select(col(idCol), col("__sh"))
     candidates
@@ -267,10 +231,9 @@ object Dedup {
     * carries (shingle, id) postings; candidate fan-out is bounded by
     * shingle document-frequency (near-dup corpora keep boilerplate
     * shingles rare after [[exact]] dedup). `maxBucket` caps hot-shingle
-    * postings — NOTE that unlike the LSH paths, a cap here breaks
-    * exactness (a pair whose every shared shingle is over-cap is lost),
-    * so it defaults to off; at 100 TB prefer [[minhashLsh]] and keep this
-    * as the ground-truth/verification operator.
+    * postings (0 = off, the default): a cap breaks exactness (the
+    * [[Banding]] contract), so at 100 TB prefer [[minhashLsh]] and keep
+    * this as the ground-truth/verification operator.
     */
   def jaccardJoin(
       df: DataFrame, idCol: String, textCol: String,
@@ -285,19 +248,7 @@ object Dedup {
     // and intersecting per candidate.
     val sized = df.select(col(idCol), shingles(col(textCol), k).as("__sh"))
       .select(col(idCol), size(col("__sh")).as("__n"), explode(col("__sh")).as("__tok"))
-    val postings = dropOverCapBuckets(sized, Seq("__tok"), maxBucket)
-    val a = postings.select(col(idCol).as("id_a"), col("__n").as("__na"), col("__tok"))
-    val b = postings.select(col(idCol).as("id_b"), col("__n").as("__nb"), col("__tok"))
-    // SHUFFLE_HASH, not broadcast: the two sides are the SAME posting
-    // frame, so a shuffle join's two Exchanges canonicalize identically
-    // and the second becomes a ReusedExchange — the corpus is scanned
-    // and shingled ONCE, not once per side (a broadcast join keeps both
-    // subtrees alive: it re-shingles the corpus to build the hash
-    // relation AND to stream against it). At 100 TB a corpus-sized
-    // posting table could never broadcast anyway — this pins the plan
-    // the big regime uses, minus the driver collect.
-    a.hint("shuffle_hash").join(b, Seq("__tok"))
-      .filter(col("id_a") < col("id_b"))
+    Banding.selfPairs(sized, Seq("__tok"), idCol, maxBucket, Seq("__n"))
       .filter(least(col("__na"), col("__nb")).cast("double") >=
         lit(threshold) * greatest(col("__na"), col("__nb")))
       .groupBy("id_a", "id_b", "__na", "__nb").agg(count(lit(1)).as("__c"))
@@ -336,10 +287,10 @@ object Dedup {
     * collapsed before any signature work (see below), so duplicate
     * mass costs output size, never bucket blowup.
     *
-    * `maxBucket` caps residual hot signature buckets — counted in
-    * DISTINCT strings — with the exactness trade as usual (default
-    * off — this IS the ground-truth operator; exact-dup pairs are
-    * always found regardless of the cap).
+    * `maxBucket` caps residual hot signature buckets, counted in
+    * DISTINCT strings (0 = off, the default — this IS the ground-truth
+    * operator); capped recall is the [[Banding]] contract. An id
+    * carrying two strings within `maxDist` never pairs with itself.
     */
   def editDistanceJoin(
       df: DataFrame, idCol: String, strCol: String,
@@ -354,9 +305,6 @@ object Dedup {
     // expensive stages (neighborhood signatures, bucket join, verify)
     // run over DISTINCT strings only; the id groups expand back at
     // output, where the pair count is the answer's own size.
-    // materialized once (localCheckpoint): four consumers — the
-    // within-group expansion, the signature postings and both candidate
-    // string joins — would otherwise each replay the collapse shuffle
     // group ids derive from the STRING (xxhash64), not from
     // array_min(ids): a duplicate id value attached to two distinct
     // strings would collide min-id group keys and fan out the candidate
@@ -365,23 +313,12 @@ object Dedup {
     // collision between two <=k-edit candidate strings is the only
     // residual hazard, vanishingly unlikely and caught by the exact
     // levenshtein verify emitting a dup pair, not a wrong distance)
-    val groups = df
+    val groups = Banding.collapse(df
       .select(col(idCol).as("__id"), col(strCol).as("__s"))
-      .filter(col("__s").isNotNull && length(col("__s")) >= minLen)
-      .groupBy("__s").agg(collect_list(col("__id")).as("__ids"))
+      .filter(col("__s").isNotNull && length(col("__s")) >= minLen), "__s")
       .withColumn("__gid", xxhash64(col("__s")))
-      .transform(Pins.pin(_))
-    // identical strings are dist-0 pairs by definition
-    val within = groups.filter(size(col("__ids")) >= 2)
-      .select(explode(col("__ids")).as("id_a"), col("__ids"))
-      .select(col("id_a"), explode(col("__ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0).as("dist"))
     // gid-only postings: the signature shuffle carries 2 longs per row,
-    // never the strings; ONE shuffle groups by signature and emits
-    // within-bucket group pairs (a self-join would recompute the whole
-    // neighborhood expansion per side).
-    // The checkpointed `groups` frame is AQE-coalesced by BYTES, which
+    // never the strings. The checkpointed `groups` frame is AQE-coalesced by BYTES, which
     // on a small-byte corpus serializes the O(len²/2)-per-string
     // neighborhood hashing on one core — fan it out when coalescing
     // left fewer partitions than cores (the qProfile guard; the extra
@@ -394,9 +331,8 @@ object Dedup {
     val posts = gSrc.select(col("__gid"),
       explode(array_distinct(graft.functions.FunctionDefs.call(
         "delete_variant_hashes", col("__s"), lit(maxDist)))).as("__sig"))
-    val cap = if (maxBucket > 0) maxBucket else Int.MaxValue
-    // the signature aggregate sees ~len²/2 × strings rows, nearly all
-    // singleton groups — size its partitioning to the MEASURED posting
+    // the signature self-join sees ~len²/2 × strings rows, nearly all
+    // singleton buckets — size its partitioning to the MEASURED posting
     // count, not the session default (38M rows into 32 partitions
     // spills every hash map; 256 partitions measured 71 → 29 s at sf1).
     // r12: the former 8×-session-default heuristic kept per-partition
@@ -405,7 +341,7 @@ object Dedup {
     // distinct string emits ≤ 1 + L + L(L−1)/2 signatures for k=2 —
     // costs one tiny job and keeps the maps at ~128k rows per
     // partition at EVERY corpus size, so host memory pressure cannot
-    // turn the aggregation into a spill storm (the r11 driver-sweep
+    // turn the pair generation into a spill storm (the r11 bench-sweep
     // divergence class). AQE can coalesce small post-shuffle
     // partitions but never split a pre-aggregation map that is
     // already too big.
@@ -423,49 +359,20 @@ object Dedup {
     // wrap (postEst / 128000).toInt negative and silently fall back to
     // the session floor — the exact regime the sizing exists for
     val sigParts = math.min(4096L, math.max(floor.toLong, postEst / 128000L + 1)).toInt
-    val pp = posts.repartition(sigParts, col("__sig"))
-    val gidPairs = (if (cap == Int.MaxValue) {
-      // Uncapped pair generation as a signature SELF-JOIN, not a
-      // collect_list aggregate: nearly every signature group is a
-      // singleton, so the former groupBy allocated one list per
-      // posting row (~postEst tiny ArrayBuffers through an
-      // ObjectHashAggregate) just to throw most of them away —
-      // measured 148 s task time in ONE stage at 10× sf0.1.
-      // SHUFFLE_HASH on the shared repartition ([[jaccardJoin]]'s
-      // reasoning): the two sides canonicalize to the SAME exchange,
-      // so the neighborhood expansion runs once and the second side
-      // is a ReusedExchange; within-bucket pairs stream out of a
-      // per-partition hash build (≤ ~128k rows by sigParts, an
-      // explicit partition count AQE leaves alone) instead of
-      // materializing per-group lists. Emits exactly the old shape's
-      // rows: co-bucketed ordered pairs, deduped across signatures.
-      pp.select(col("__sig"), col("__gid").as("__ga")).hint("shuffle_hash")
-        .join(pp.select(col("__sig"), col("__gid").as("__gb")), Seq("__sig"))
-        .filter(col("__ga") < col("__gb"))
-    } else {
-      // Capped regime needs every bucket's SIZE before any pair is
-      // emitted — the aggregate stays (cap filtering is the point).
-      pp.groupBy("__sig")
-        .agg(collect_list(col("__gid")).as("__m"))
-        .filter(size(col("__m")) >= 2 && size(col("__m")) <= cap)
-        .select(explode(col("__m")).as("__ga"), col("__m"))
-        .select(col("__ga"), explode(col("__m")).as("__gb"))
-        .filter(col("__ga") < col("__gb"))
-    }).select("__ga", "__gb").distinct()
+    // Pair generation is the signature self-join on this explicit
+    // repartition (a partition count AQE leaves alone): within-bucket
+    // pairs stream out of a per-partition hash build of ≤ ~128k rows,
+    // where a collect_list aggregate allocated one list per posting row
+    // (~postEst tiny lists, nearly all singletons — measured 148 s task
+    // time in ONE stage at 10× sf0.1).
+    val gidPairs = Banding.selfPairs(
+        posts.repartition(sigParts, col("__sig")), Seq("__sig"), "__gid", maxBucket)
+      .select("id_a", "id_b").distinct()
     // strings + member lists re-acquired only for surviving candidates
-    val sides = groups.select(col("__gid"), col("__s"), col("__ids"))
-    val cross = gidPairs
-      .join(sides.select(col("__gid").as("__ga"), col("__s").as("__sa"),
-        col("__ids").as("__ia")), "__ga")
-      .join(sides.select(col("__gid").as("__gb"), col("__s").as("__sb"),
-        col("__ids").as("__ib")), "__gb")
-      .withColumn("dist", levenshtein(col("__sa"), col("__sb")))
-      .filter(col("dist") <= maxDist) // distinct strings ⇒ dist ≥ 1
-      .select(explode(col("__ia")).as("__a"), col("__ib"), col("dist"))
-      .select(col("__a"), explode(col("__ib")).as("__b"), col("dist"))
-      .select(least(col("__a"), col("__b")).as("id_a"),
-        greatest(col("__a"), col("__b")).as("id_b"), col("dist"))
-    within.unionByName(cross)
+    val cross = Banding.expand(gidPairs, groups, "__gid")(
+      _.withColumn("dist", levenshtein(col("__sa"), col("__sb")))
+        .filter(col("dist") <= maxDist)) // distinct strings ⇒ dist ≥ 1
+    Banding.within(groups).unionByName(cross)
   }
 
   /** The w-bit chunk array of a 64-bit hash column — the shared banding
@@ -501,19 +408,15 @@ object Dedup {
     * output size, never bucket blowup. Postings carry the 8-byte hash
     * alone; id lists re-join only for surviving verified hash pairs.
     *
-    * `maxBucket` caps residual hot band buckets — counted in DISTINCT
-    * hashes (a diverse near-collision population, not duplicate mass) —
-    * with the usual exactness trade: over-cap buckets drop their
-    * CROSS-hash candidate pairs (dist-0 pairs are always exact). The
-    * trade is a measured contract: DedupSpec plants a retention corpus
-    * and pins what a cap keeps. Regimes (r10): > 0 explicit cap; 0
-    * (default) the [[defaultMaxBucketFixedWidth]] cap — 8× the uniform
-    * occupancy n/2^width of the DISTINCT hash count (free — `groups`
-    * is already materialized; an ABSOLUTE √n cap is wrong here, see
-    * that helper's doc); < 0 unlimited, the ground-truth regime the
-    * CORRECTNESS entries pin (their oracles replay the complete pair
-    * set, which a cap may legitimately shrink at scales where a band
-    * bucket outgrows it).
+    * `maxBucket` caps residual hot band buckets, counted in DISTINCT
+    * hashes; capped recall is the [[Banding]] contract, and DedupSpec
+    * plants a retention corpus that pins what a cap keeps. Regimes
+    * (r10): > 0 explicit cap; 0 (default) the
+    * [[defaultMaxBucketFixedWidth]] cap — 8× the uniform occupancy
+    * n/2^width of the DISTINCT hash count (free — `groups` is already
+    * materialized; an ABSOLUTE √n cap is wrong here, see that helper's
+    * doc); < 0 unlimited, the ground-truth regime the CORRECTNESS
+    * entries pin.
     *
     * Precondition: `idCol` is unique (one signature per id, the
     * [[editDistanceJoin]] contract). Duplicate ids would re-enter the
@@ -527,54 +430,25 @@ object Dedup {
     require(pieces >= 2 && 64 % pieces == 0, "pieces must divide 64")
     require(maxDist >= 0 && maxDist < pieces,
       "pigeonhole banding needs maxDist < pieces")
-    val width = 64 / pieces
-    // materialized once (localCheckpoint): three consumers — the
-    // within-group expansion, the band postings and the candidate id
-    // re-join — would otherwise each replay the collapse shuffle
-    val groups = df
+    val groups = Banding.collapse(df
       .select(col(idCol).as("__id"), col(hashCol).cast("long").as("__h"))
-      .filter(col("__h").isNotNull)
-      .groupBy("__h").agg(collect_list(col("__id")).as("__ids"))
-      .transform(Pins.pin(_))
-    // hash-identical members are dist-0 pairs by definition
-    val within = groups.filter(size(col("__ids")) >= 2)
-      .select(explode(col("__ids")).as("id_a"), col("__ids"))
-      .select(col("id_a"), explode(col("__ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0).as("dist"))
+      .filter(col("__h").isNotNull), "__h")
     // band DISTINCT hashes only; the posting shuffle carries 2 longs +
     // a band position per row, never ids or member lists
     val posts = groups.select(col("__h"),
       posexplode(hammingChunks("__h", pieces)).as(Seq("__p", "__k")))
-    val cap =
-      if (maxBucket > 0) maxBucket
-      else if (maxBucket == 0) defaultMaxBucketFixedWidth(groups.count(), width)
-      else Int.MaxValue
-    val hashPairs = posts.groupBy("__p", "__k")
-      .agg(collect_list(col("__h")).as("__m"))
-      .filter(size(col("__m")) >= 2 && size(col("__m")) <= cap)
-      .select(explode(col("__m")).as("__ha"), col("__m"))
-      .select(col("__ha"), explode(col("__m")).as("__hb"))
-      .filter(col("__ha") < col("__hb"))
-      .withColumn("dist", bit_count(col("__ha").bitwiseXOR(col("__hb"))))
+    val cap = Banding.cap(maxBucket,
+      defaultMaxBucketFixedWidth(groups.count(), 64 / pieces))
+    val hashPairs = Banding.selfPairs(posts, Seq("__p", "__k"), "__h", cap)
+      .withColumn("dist", bit_count(col("id_a").bitwiseXOR(col("id_b"))))
       .filter(col("dist") <= maxDist)
-      .select("__ha", "__hb", "dist").distinct()
+      .select("id_a", "id_b", "dist").distinct()
     // id lists re-acquired only for surviving verified hash pairs.
     // Under the unique-id precondition the two id lists are disjoint
     // (an id carries ONE hash) so no distinct() is needed on the
-    // output-sized frame; the =!= guard keeps an id that violates the
-    // contract across two near hashes from surfacing as a self pair.
-    val cross = hashPairs
-      .join(groups.select(col("__h").as("__ha"), col("__ids").as("__ia")),
-        "__ha")
-      .join(groups.select(col("__h").as("__hb"), col("__ids").as("__ib")),
-        "__hb")
-      .select(explode(col("__ia")).as("__a"), col("__ib"), col("dist"))
-      .select(col("__a"), explode(col("__ib")).as("__b"), col("dist"))
-      .filter(col("__a") =!= col("__b"))
-      .select(least(col("__a"), col("__b")).as("id_a"),
-        greatest(col("__a"), col("__b")).as("id_b"), col("dist"))
-    within.unionByName(cross)
+    // output-sized frame
+    Banding.within(groups)
+      .unionByName(Banding.expand(hashPairs, groups, "__h")(identity))
   }
 
   // ------------------------------------------------------------ simhash
@@ -668,11 +542,7 @@ object Dedup {
         posexplode(array((0 until tables).map(t =>
           graft.functions.FunctionDefs.call("lsh_bucket",
             col("__v"), lit(nBits), lit(seed + t * 7919))): _*)).as(Seq("__tbl", "__bucket")))
-    val a = e.select(col("__id").as("id_a"), col("__v").as("__va"), col("__tbl"), col("__bucket"))
-    val b = e.select(col("__id").as("id_b"), col("__v").as("__vb"), col("__tbl"), col("__bucket"))
-    // self-join: SHUFFLE_HASH + ReusedExchange — signatures computed once
-    a.hint("shuffle_hash").join(b, Seq("__tbl", "__bucket"))
-      .filter(col("id_a") < col("id_b"))
+    Banding.selfPairs(e, Seq("__tbl", "__bucket"), "__id", BucketUnlimited, Seq("__v"))
       .select("id_a", "id_b", "__va", "__vb").distinct()
       .withColumn("cos", Vectors.cosine(col("__va"), col("__vb")))
       .filter(col("cos") >= threshold)

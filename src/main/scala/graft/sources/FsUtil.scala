@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Filesystem probes that follow Spark's Hadoop configuration. Layout
   * paths may live on any Hadoop-supported filesystem (file:, hdfs:,
@@ -35,4 +36,21 @@ private[graft] object FsUtil {
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .map(_.getPath.getName).toSet
   }
+
+  /** Logical delete shared by the [[AnnLayout]], [[MinhashIndex]] and
+    * [[HammingIndex]] layouts: the distinct ids land in
+    * `path/tombstones` (append mode, id-only metadata).
+    */
+  def tombstone(path: String, ids: DataFrame, idCol: String): Unit =
+    ids.select(col(idCol).as("id")).distinct()
+      .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
+
+  /** `frame` minus the ids tombstoned under `path`, through one
+    * broadcast anti-join on `id`.
+    */
+  def withoutTombstones(s: SparkSession, path: String, frame: DataFrame): DataFrame =
+    if (!exists(s, s"$path/tombstones")) frame
+    else frame.join(
+      broadcast(s.read.parquet(s"$path/tombstones").select("id").distinct()),
+      Seq("id"), "left_anti")
 }

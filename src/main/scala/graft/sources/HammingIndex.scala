@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.{Dedup, Pins}
+import graft.ops.{Banding, Dedup, Pins}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,14 +52,6 @@ import org.apache.spark.sql.functions._
   */
 object HammingIndex {
 
-  /** (piece, chunk) → one sortable long: piece in the high 32 bits
-    * (chunk is ≤ 32 bits — width = 64/pieces with pieces ≥ 2).
-    */
-  private def combinedKey(piece: org.apache.spark.sql.Column,
-                          chunk: org.apache.spark.sql.Column) =
-    shiftleft(piece.cast("long"), 32)
-      .bitwiseOR(chunk.cast("long").bitwiseAND(lit(0xffffffffL)))
-
   private def writeParams(s: SparkSession, path: String, pieces: Int,
                           nHashes: Long): Unit = {
     import s.implicits._
@@ -73,7 +65,7 @@ object HammingIndex {
   private def chunkKeys(distinctH: DataFrame, pieces: Int): DataFrame =
     distinctH.select(col("__h"),
         posexplode(Dedup.hammingChunks("__h", pieces)).as(Seq("__p", "__k")))
-      .select(combinedKey(col("__p"), col("__k")).as("key"), col("__h"))
+      .select(Banding.combinedKey(col("__p"), col("__k")).as("key"), col("__h"))
 
   /** Scan the history signatures once, write `path/docs` (id, h)
     * hash-clustered into `nDocFiles`, `path/postings` (key, h) over
@@ -150,15 +142,7 @@ object HammingIndex {
     */
   def delete(s: SparkSession, path: String, ids: DataFrame,
              idCol: String = "id"): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-
-  private def withoutTombstones(s: SparkSession, path: String,
-                                frame: DataFrame): DataFrame =
-    if (!FsUtil.exists(s, s"$path/tombstones")) frame
-    else frame.join(
-      broadcast(s.read.parquet(s"$path/tombstones").select("id").distinct()),
-      Seq("id"), "left_anti")
+    FsUtil.tombstone(path, ids, idCol)
 
   /** Merge-on-write maintenance: re-cluster the surviving docs into
     * `dest` and REBUILD postings from their distinct hashes — so hashes
@@ -170,7 +154,7 @@ object HammingIndex {
   def compact(s: SparkSession, src: String, dest: String,
               nPostingFiles: Int = 64, nDocFiles: Int = 32): Unit = {
     FsUtil.delete(s, s"$dest/tombstones")
-    val docs = withoutTombstones(s, src, s.read.parquet(s"$src/docs"))
+    val docs = FsUtil.withoutTombstones(s, src, s.read.parquet(s"$src/docs"))
     StatsManifest.write(docs, s"$dest/docs", "h", nDocFiles)
     val pieces = readParams(s, src).getInt(0)
     val distinctH = s.read.parquet(s"$dest/docs")
@@ -191,13 +175,9 @@ object HammingIndex {
     * [[Dedup.hammingPairs]] regimes (> 0 explicit, 0 =
     * [[Dedup.defaultMaxBucketFixedWidth]] from the indexed distinct-
     * hash count, < 0 unlimited); the guard counts HISTORY distinct-hash
-    * fan-out per probed key, the batch-internal pass inherits the same
-    * cap, and dist-0 pairs bypass both (the direct equality path).
-    *
-    * The probe bands on the maxDist+1 most selective chunk positions
-    * only, which is exact only when `maxBucket < 0`: with a cap active,
-    * a pair whose every retained position is over cap is dropped, even
-    * when a position the probe did not retain would have paired it.
+    * fan-out per probed key and the batch-internal pass inherits the
+    * same cap. Capped recall, including the retained positions all
+    * being over cap: the [[graft.ops.Banding]] contract.
     * The probe's pins belong to the caller's scope ([[graft.ops.Pins]]).
     */
   def probe(s: SparkSession, path: String,
@@ -226,10 +206,8 @@ object HammingIndex {
                         docRows: Seq[Row]): DataFrame = {
     require(maxDist >= 0 && maxDist < pieces,
       "pigeonhole banding needs maxDist < pieces")
-    val width = 64 / pieces
-    val cap =
-      if (maxBucket == 0) Dedup.defaultMaxBucketFixedWidth(nHashes, width)
-      else maxBucket
+    val cap = Banding.cap(maxBucket,
+      Dedup.defaultMaxBucketFixedWidth(nHashes, 64 / pieces))
 
     val b = batch
       .select(col(idCol).as("__bid"), col(hashCol).cast("long").as("__bh"))
@@ -245,7 +223,7 @@ object HammingIndex {
     // banding on maxDist+1 positions is complete, and the exact
     // popcount verify below removes every extra candidate, so the
     // uncapped output set is INDEPENDENT of which positions are
-    // retained (a cap breaks that: see the probe doc).
+    // retained (a cap breaks that: the Banding contract).
     // Retain the most selective ones: a position where few distinct
     // chunk values cover the whole batch (a near-constant signature
     // region — real phash/simhash populations have them too) is a
@@ -282,49 +260,32 @@ object HammingIndex {
       if (files.isEmpty) s.read.parquet(s"$path/postings").filter(lit(false))
       else s.read.parquet(files: _*)
 
-    // hot-key guard over the pruned postings: a probed chunk key whose
-    // HISTORY distinct-hash fan-out exceeds the cap is the
-    // everything-collides-here band banding cannot make selective
-    // (countDistinct: appended generations may re-post a hash)
-    val guarded =
-      if (cap <= 0) posts
-      else {
-        val hot = posts.join(broadcast(bkeys.select("key").distinct()), "key")
-          .groupBy("key").agg(countDistinct(col("__h")).as("__n"))
-          .filter(col("__n") > cap).select("key")
-        posts.join(broadcast(hot), Seq("key"), "left_anti")
-      }
-
-    // candidate hash pairs: history hashes sharing ≥ 1 chunk with a
-    // batch hash (the batch side broadcasts — the posting scan is
-    // probed map-side, never shuffled), verified by exact popcount
-    // BEFORE any id expansion. Hash-identical pairs are excluded here
-    // and handled by the cap-immune direct path below.
-    val banded = guarded.join(broadcast(bkeys), "key")
-      .filter(col("__h") =!= col("__bh"))
-      .select("__h", "__bh").distinct()
-      .withColumn("dist", bit_count(col("__h").bitwiseXOR(col("__bh"))))
-      .filter(col("dist") <= maxDist)
-
     // dist-0: batch hashes meet history docs by hash EQUALITY — exact
     // duplicates never depend on banding or survive-the-cap luck
     val direct = bh
       .select(col("__h"), col("__h").as("__bh"), lit(0).as("dist"))
 
+    // candidate hash pairs: history hashes sharing ≥ 1 retained chunk
+    // with a batch hash, keys hot in HISTORY distinct hashes shed
+    // (appended generations may re-post a hash), verified by exact
+    // popcount BEFORE any id expansion; hash-identical pairs come from
+    // the cap-immune direct path instead. The verified pairs pin ONCE
+    // (output-sized): the docs-file pruning collects them and the id
+    // expansion reuses the rows instead of re-running the candidate +
+    // verify pipeline (the r11 eager-dfiles double-compute).
+    val pairsH = Banding.probeCandidates(posts, bkeys, cap, "__h", "__bh")(
+      _.withColumn("dist", bit_count(col("__h").bitwiseXOR(col("__bh"))))
+        .filter(col("dist") <= maxDist)
+        .unionByName(direct))
+
     // one docs expansion for both: prune docs files by the verified
     // hash set's ranges, drop tombstoned ids, join hash → history ids,
     // then batch ids re-attach by hash (each id carries ONE hash).
     // The distinct absorbs doc-row duplicates from replayed appends.
-    // The verified pairs checkpoint ONCE (output-sized): the docs-file
-    // pruning needs them collected anyway, and the id expansion reuses
-    // the materialized rows instead of re-running the whole
-    // candidate+verify pipeline a second time (the r11 eager-dfiles
-    // double-compute).
-    val pairsH = Pins.pin(banded.unionByName(direct))
     val hArr = pairsH.select(col("__h")).distinct().collect()
       .map(_.getAs[Number](0).longValue())
     val dfiles = StatsManifest.pruneLocal(docRows, hArr)
-    val docsP = withoutTombstones(s, path,
+    val docsP = FsUtil.withoutTombstones(s, path,
       if (dfiles.isEmpty) s.read.parquet(s"$path/docs").filter(lit(false))
       else s.read.parquet(dfiles: _*))
     val cross = docsP
@@ -361,9 +322,9 @@ object HammingIndex {
     private val docRows = scala.collection.mutable.ArrayBuffer[Row](
       StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq: _*)
 
-    /** Cached-state probe — same output contract, and the same capped-
-      * regime recall caveat, as the object-level [[HammingIndex.probe]];
-      * its pins belong to the caller's scope ([[graft.ops.Pins]]).
+    /** Cached-state probe — same output contract as the object-level
+      * [[HammingIndex.probe]] (capped recall: the [[graft.ops.Banding]]
+      * contract); its pins belong to the caller's scope.
       */
     def probe(batch: DataFrame, idCol: String, hashCol: String,
               maxDist: Int, maxBucket: Int = 0): DataFrame =

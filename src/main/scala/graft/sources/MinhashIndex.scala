@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.{Dedup, Pins}
+import graft.ops.{Banding, Dedup, Pins}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,12 +61,6 @@ import org.apache.spark.sql.functions._
   */
 object MinhashIndex {
 
-  /** (band, bkey) → one sortable long: band in the high 32 bits. */
-  private def combinedKey(band: org.apache.spark.sql.Column,
-                          bkey: org.apache.spark.sql.Column) =
-    shiftleft(band.cast("long"), 32)
-      .bitwiseOR(bkey.cast("long").bitwiseAND(lit(0xffffffffL)))
-
   private def writeParams(s: SparkSession, path: String, k: Int, numPerm: Int,
                           bands: Int, seed: Long, nDocs: Long): Unit = {
     import s.implicits._
@@ -102,7 +96,7 @@ object MinhashIndex {
     val stored = spark.read.parquet(s"$path/docs")
       .withColumn("__sig", Dedup.minhashSig(col("sh"), numPerm, seed))
     val posts = Dedup.bandKeyRows(stored, "id", numPerm, bands)
-      .select(combinedKey(col("__band"), col("__bkey")).as("key"), col("id"))
+      .select(Banding.combinedKey(col("__band"), col("__bkey")).as("key"), col("id"))
     StatsManifest.write(posts, s"$path/postings", "key", nPostingFiles)
     val nDocs = spark.read.parquet(s"$path/docs").count() // footer-count
     writeParams(spark, path, k, numPerm, bands, seed, nDocs)
@@ -150,7 +144,7 @@ object MinhashIndex {
         s"$path/docs", "id", nFiles = 4)
       val postRows = StatsManifest.append(
         Dedup.bandKeyRows(withSig, idCol, numPerm, bands)
-          .select(combinedKey(col("__band"), col("__bkey")).as("key"),
+          .select(Banding.combinedKey(col("__band"), col("__bkey")).as("key"),
             col(idCol).as("id")),
         s"$path/postings", "key", nFiles = 8)
       val nDocs = nDocsOld + withSig.count()
@@ -173,15 +167,7 @@ object MinhashIndex {
     */
   def delete(s: SparkSession, path: String, ids: DataFrame,
              idCol: String = "id"): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-
-  private def withoutTombstones(s: SparkSession, path: String,
-                                frame: DataFrame): DataFrame =
-    if (!FsUtil.exists(s, s"$path/tombstones")) frame
-    else frame.join(
-      broadcast(s.read.parquet(s"$path/tombstones").select("id").distinct()),
-      Seq("id"), "left_anti")
+    FsUtil.tombstone(path, ids, idCol)
 
   /** Merge-on-write maintenance: re-cluster docs and postings into
     * `dest` with tombstoned ids physically dropped and the appended
@@ -196,9 +182,9 @@ object MinhashIndex {
   def compact(s: SparkSession, src: String, dest: String,
               nPostingFiles: Int = 64, nDocFiles: Int = 32): Unit = {
     FsUtil.delete(s, s"$dest/tombstones")
-    val docs = withoutTombstones(s, src, s.read.parquet(s"$src/docs"))
+    val docs = FsUtil.withoutTombstones(s, src, s.read.parquet(s"$src/docs"))
     StatsManifest.write(docs, s"$dest/docs", "id", nDocFiles)
-    val posts = withoutTombstones(s, src, s.read.parquet(s"$src/postings"))
+    val posts = FsUtil.withoutTombstones(s, src, s.read.parquet(s"$src/postings"))
     StatsManifest.write(posts, s"$dest/postings", "key", nPostingFiles)
     val p = readParams(s, src)
     val nDocs = s.read.parquet(s"$dest/docs").count()
@@ -217,10 +203,10 @@ object MinhashIndex {
     * stored at build time) and guards BOTH quadratic terms: probed
     * posting keys whose HISTORY fan-out exceeds the cap drop before
     * the candidate join, and the batch-internal pass inherits the same
-    * cap — note the guard counts differ from a capped re-band's
-    * (history fan-out / batch occupancy vs combined occupancy), so
-    * capped regimes are each a documented approximation of the exact
-    * set, not bit-equal to one another.
+    * cap. Capped recall is the [[graft.ops.Banding]] contract; the
+    * guard counts differ from a capped re-band's (history fan-out /
+    * batch occupancy vs combined occupancy), so the two capped results
+    * are not bit-equal to one another.
     *
     * Cost floor: each probe pays a fixed driver overhead — the params
     * read plus two manifest resolutions and the pruning collects
@@ -253,14 +239,13 @@ object MinhashIndex {
                         k: Int, numPerm: Int, bands: Int, seed: Long,
                         nDocs: Long, postRows: Seq[Row],
                         docRows: Seq[Row]): DataFrame = {
-    val cap =
-      if (maxBucket == 0) Dedup.defaultMaxBucket(nDocs) else maxBucket
+    val cap = Banding.cap(maxBucket, Dedup.defaultMaxBucket(nDocs))
 
     // batch signatures once (two consumers: band keys + verify shingles)
     val bsig = Pins.pin(Dedup.sigFrame(batch, idCol, textCol, k, numPerm, seed)
       .select(col(idCol).as("__bid"), col("__sh").as("__bsh"), col("__sig")))
     val bkeys = Dedup.bandKeyRows(bsig, "__bid", numPerm, bands)
-      .select(combinedKey(col("__band"), col("__bkey")).as("key"),
+      .select(Banding.combinedKey(col("__band"), col("__bkey")).as("key"),
         col("__bid"))
 
     // manifest pruning, driver-side: the batch's distinct band keys are
@@ -274,40 +259,21 @@ object MinhashIndex {
     // tombstoned history ids drop from the posting stream before the
     // guard count and the candidate join — a deleted doc stops pairing
     // immediately, and hot-key occupancy reflects the LIVE history
-    val posts = withoutTombstones(s, path,
+    val posts = FsUtil.withoutTombstones(s, path,
       if (files.isEmpty) s.read.parquet(s"$path/postings").filter(lit(false))
       else s.read.parquet(files: _*))
 
-    // hot-key guard: a probed key whose HISTORY fan-out exceeds the cap
-    // is a boilerplate band (the minhashLsh maxBucket rationale — the
-    // candidate join would go quadratic on it); counted over the pruned
-    // postings only, broadcast into an anti-join
-    val guarded =
-      if (cap <= 0) posts
-      else {
-        val hot = posts.join(broadcast(bkeys.select("key").distinct()), "key")
-          .groupBy("key").agg(count(lit(1)).as("__n")).filter(col("__n") > cap)
-          .select("key")
-        posts.join(broadcast(hot), Seq("key"), "left_anti")
-      }
-
-    // candidates: history ids colliding with a batch id in ≥ 1 band.
-    // The batch side broadcasts (a day's keys vs the history's): the
-    // posting scan is probed map-side, never shuffled.
-    // candidates checkpoint ONCE (cap-bounded output size): the
-    // docs-file pruning below needs their ids collected anyway, and
-    // the verify join reuses the materialized rows instead of
-    // re-running the posting scan + candidate join a second time (the
-    // r11 eager-dfiles double-compute)
-    val cands = guarded.join(broadcast(bkeys), "key")
-      .filter(col("id") =!= col("__bid"))
-      .select(col("id").as("__hid"), col("__bid")).distinct()
-      .transform(Pins.pin(_))
+    // candidates: history ids colliding with a batch id in ≥ 1 band,
+    // keys whose HISTORY fan-out (distinct ids) exceeds the cap shed —
+    // a boilerplate band would make the candidate join quadratic. The
+    // pinned candidates feed both the docs-file pruning collect and
+    // the verify join (the r11 eager-dfiles double-compute)
+    val cands = Banding.probeCandidates(posts, bkeys, cap, "id", "__bid")(identity)
 
     // history shingles for candidate ids only: docs-manifest pruning on
     // the id ranges (driver-side over the cached rows), then a
     // semi-join pins exact membership
-    val candIds = cands.select(col("__hid").as("id")).distinct()
+    val candIds = cands.select(col("id")).distinct()
     // ids keep the caller's type: prune when numeric, degrade to
     // no-pruning otherwise (a string-keyed index must not throw here —
     // the semi-join below is the correctness contract either way)
@@ -319,12 +285,12 @@ object MinhashIndex {
         .join(candIds, Seq("id"), "left_semi")
 
     val crossPairs = cands
-      .join(histSh.select(col("id").as("__hid"), col("sh").as("__hsh")), "__hid")
+      .join(histSh.select(col("id"), col("sh").as("__hsh")), "id")
       .join(bsig.select(col("__bid"), col("__bsh")), "__bid")
       .withColumn("jaccard", Dedup.jaccard(col("__hsh"), col("__bsh")))
       .filter(col("jaccard") >= threshold)
-      .select(least(col("__hid"), col("__bid")).as("id_a"),
-        greatest(col("__hid"), col("__bid")).as("id_b"), col("jaccard"))
+      .select(least(col("id"), col("__bid")).as("id_a"),
+        greatest(col("id"), col("__bid")).as("id_b"), col("jaccard"))
 
     // batch-internal pairs: the plain in-flight pass over the (small)
     // batch — a second signature evaluation of batch-sized cost only
@@ -361,8 +327,8 @@ object MinhashIndex {
       StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq: _*)
 
     /** Cached-state probe — same output contract as the object-level
-      * [[MinhashIndex.probe]]; its pins belong to the caller's scope
-      * ([[graft.ops.Pins]]).
+      * [[MinhashIndex.probe]] (capped recall: the [[graft.ops.Banding]]
+      * contract); its pins belong to the caller's scope.
       */
     def probe(batch: DataFrame, idCol: String, textCol: String,
               threshold: Double = 0.8, maxBucket: Int = 0): DataFrame =

@@ -20,10 +20,8 @@ import org.apache.spark.sql.functions._
   * unlimited regime (maxBucket < 0) the labels after ANY prefix of
   * batches are EXACTLY the batch `connectedComponents(hammingPairs(…))`
   * over everything seen — SigDupStreamSpec pins it across triggers.
-  * Only that regime is exact: the probe bands on the maxDist+1 most
-  * selective chunk positions, and with a cap active (the default
-  * maxBucket = 0 computes one) a pair whose every retained position is
-  * over cap is dropped ([[HammingIndex.probe]]).
+  * Only that regime is exact; the default maxBucket = 0 computes a cap
+  * (capped recall: the [[graft.ops.Banding]] contract).
   *
   * Same structural contracts as [[NearDupStream]]: `foreachBatch`
   * (each step is a multi-stage batch job), probe BEFORE append so a

@@ -43,6 +43,39 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestSession with Matchers {
     }
   }
 
+  test("banded self-joins compute their postings once: a ReusedExchange feeds the ShuffledHashJoin") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    // the nearest exchange under a join input, through AQE stage
+    // wrappers and single-child operators
+    def exchangeBelow(p: SparkPlan): Option[SparkPlan] = p match {
+      case r: ReusedExchangeExec => Some(r)
+      case e: Exchange => Some(e)
+      case s: QueryStageExec => exchangeBelow(s.plan)
+      case o if o.children.size == 1 => exchangeBelow(o.children.head)
+      case _ => None
+    }
+    // the property is about the operators over their sources: a source
+    // another suite left cached plans as one table-cache stage per side,
+    // which AQE does not reuse
+    spark.catalog.clearCache()
+    for (q <- Seq("dd_minhash", "dd_jaccard_join", "dd_embed_blocked", "dd_simhash", "mm_phash")) {
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      df.collect() // AQE finalizes the plan only on execution
+      val plan = df.queryExecution.executedPlan
+      val fed = nodes(plan).collect { case j: ShuffledHashJoinExec => j }
+        .filter(_.children.flatMap(exchangeBelow).exists(_.isInstanceOf[ReusedExchangeExec]))
+      withClue(s"$q plan:\n$plan") { fed should not be empty }
+    }
+  }
+
   test("Dedup.exact: survivors via aggregate + semi-join, no full-row window shuffle") {
     val docs = sources.Tables.documents(spark, sfDir)
     val df = ops.Dedup.exact(docs, "doc_id", "text")

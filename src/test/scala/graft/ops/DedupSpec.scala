@@ -556,6 +556,19 @@ class DedupSpec extends AnyFunSuite with SparkTestSession with Matchers {
       (1L, 3L, 1), (1L, 4L, 1), (2L, 3L, 1), (2L, 4L, 1))
   }
 
+  test("editDistanceJoin: an id carrying two strings within maxDist never surfaces as a self pair") {
+    import spark.implicits._
+    // id 5 carries two strings at edit distance 1 (unique-id contract
+    // violation): the cross path must not emit (5, 5, 1)
+    val alone = Seq((5L, "abcdefgh"), (5L, "abcdefgx")).toDF("id", "s")
+    Dedup.editDistanceJoin(alone, "id", "s", maxDist = 1).count() shouldBe 0
+    val withPeer = Seq((5L, "abcdefgh"), (5L, "abcdefgx"), (6L, "abcdefgz")).toDF("id", "s")
+    val got = Dedup.editDistanceJoin(withPeer, "id", "s", maxDist = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    got.foreach { case (a, b, _) => a should be < b }
+    got.toSet shouldBe Set((5L, 6L, 1))
+  }
+
   test("editDistanceJoin refuses unbounded keys loudly (no silent executor OOM)") {
     import spark.implicits._
     val docs = Seq((1L, "x" * 2000), (2L, "y" * 2000)).toDF("id", "s")

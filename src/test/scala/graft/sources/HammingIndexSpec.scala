@@ -198,4 +198,27 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     probed should contain((2L, 100L, 2))
     probed should contain((3L, 101L, 1))
   }
+
+  test("capped recall: a pair whose maxDist+1 retained positions are all hot is lost; capped ⊆ unlimited") {
+    import spark.implicits._
+    // one batch hash b: every position ranks alike, so the probe keeps
+    // positions 0 and 1 (maxDist = 1). Ten history hashes share b's two
+    // low bytes, making both retained buckets hot at a cap of 5. The
+    // target x = b with bit 60 flipped shares chunks 0..6 with b, so an
+    // unretained position would pair it — but only 0 and 1 are probed.
+    val b = 0x2A2AL
+    val hot = (1L to 10L).map(i => (i, (i << 40) | b))
+    val x = b ^ (1L << 60)
+    val p2 = java.nio.file.Files.createTempDirectory("graft-hmix-allhot").toString + "/ix"
+    HammingIndex.build((hot :+ ((50L, x))).toDF("doc_id", "sig"), "doc_id", "sig", p2,
+      pieces = 8, nPostingFiles = 4, nDocFiles = 2)
+    val batch2 = Seq((100L, b)).toDF("doc_id", "sig")
+    val capped = pairSet(HammingIndex.probe(spark, p2, batch2,
+      "doc_id", "sig", maxDist = 1, maxBucket = 5))
+    val unlimited = pairSet(HammingIndex.probe(spark, p2, batch2,
+      "doc_id", "sig", maxDist = 1, maxBucket = -1))
+    unlimited should contain((50L, 100L, 1))
+    capped should not contain ((50L, 100L, 1))
+    capped.subsetOf(unlimited) shouldBe true
+  }
 }

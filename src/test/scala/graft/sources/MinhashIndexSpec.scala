@@ -188,4 +188,24 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
       "doc_id", "text", threshold = 0.5, maxBucket = -1))
     capped.subsetOf(unlimited) shouldBe true
   }
+
+  test("a replayed append costs bytes, never pairs: the hot-key cap counts distinct history ids") {
+    import spark.implicits._
+    val p2 = java.nio.file.Files.createTempDirectory("graft-mhix-replay").toString + "/ix"
+    MinhashIndex.build(
+      Seq((1L, "an unrelated history document about something else entirely")).toDF("doc_id", "text"),
+      "doc_id", "text", p2, nPostingFiles = 2, nDocFiles = 1)
+    val day1 = Seq((10L, "the quick brown fox jumps over the lazy dog again and again today"))
+      .toDF("doc_id", "text")
+    val day2 = Seq((20L, "the quick brown fox jumps over the lazy dog again and again tomorrow"))
+      .toDF("doc_id", "text")
+    def probed = pairSet(MinhashIndex.probe(spark, p2, day2, "doc_id", "text",
+      threshold = 0.5, maxBucket = 1)).map(p => (p._1, p._2))
+    MinhashIndex.append(spark, p2, day1, "doc_id", "text")
+    probed shouldBe Set((10L, 20L))
+    // the replay duplicates doc 10's postings: each of its keys still
+    // holds ONE distinct id, inside a cap of 1
+    MinhashIndex.append(spark, p2, day1, "doc_id", "text")
+    probed shouldBe Set((10L, 20L))
+  }
 }
