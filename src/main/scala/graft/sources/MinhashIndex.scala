@@ -98,7 +98,7 @@ object MinhashIndex {
     val posts = Dedup.bandKeyRows(stored, "id", numPerm, bands)
       .select(Banding.combinedKey(col("__band"), col("__bkey")).as("key"), col("id"))
     StatsManifest.write(posts, s"$path/postings", "key", nPostingFiles)
-    val nDocs = spark.read.parquet(s"$path/docs").count() // footer-count
+    val nDocs = stored.count() // footer-count: __sig is pruned
     writeParams(spark, path, k, numPerm, bands, seed, nDocs)
   }
 

@@ -2,7 +2,12 @@ package graft.sources
 
 import graft.functions.st
 import graft.geom.Z2
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /** Z2-clustered parquet layout — the storage half of the spatial
@@ -14,8 +19,10 @@ import org.apache.spark.sql.functions._
   * neighborhood, and a coarse prefix becomes a directory partition.
   *
   * Read side: a query window prunes three times —
-  *   1. directory pruning: `z2p IN (covering cells)` → PartitionFilters,
-  *      unmatched directories are never listed;
+  *   1. directory pruning: the driver lists the layout root and only
+  *      the covered `z2p=` and spill directories (unmatched directories
+  *      are never listed, no listing job runs), and `z2p IN (covering
+  *      cells)` stays as PartitionFilters;
   *   2. row-group pruning: SpatialFilterPushdown rewrites
   *      `st_intersects(extent, window)` into field ranges → PushedFilters
   *      against the sorted row-group stats;
@@ -59,13 +66,32 @@ object SpatialLayout {
   /** Scan a Z2 layout pruned to a query window: covered directories plus
     * the spill directory, extent ranges for row-group pruning, then the
     * exact JTS predicate on the survivors.
+    *
+    * Building the frame runs no Spark job, so the scan is the window's
+    * only one: the driver lists the root and the covered `z2p=`
+    * directories that exist, and reads the data schema from one footer.
+    * With no covered directory, any one `z2p=` directory stands in and
+    * the partition filter prunes it to nothing (an empty, typed frame).
     */
   def readWindow(spark: SparkSession, path: String,
                  xmin: Double, ymin: Double, xmax: Double, ymax: Double,
                  dirLevel: Int = 4, geomCol: String = "geom"): DataFrame = {
     val cells = (Z2.coverEnvelope(xmin, ymin, xmax, ymax, dirLevel) :+ SpillKey).map(Long.box)
     val window = st.makeBBOX(lit(xmin), lit(ymin), lit(xmax), lit(ymax))
-    spark.read.parquet(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val cellDirs = root.getFileSystem(conf).listStatus(root).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("z2p="))
+    require(cellDirs.nonEmpty, s"no z2p= directories under $path")
+    val wanted = cells.map(c => s"z2p=$c").toSet
+    val covered = cellDirs.filter(d => wanted(d.getName))
+    val dirs = if (covered.nonEmpty) covered else cellDirs.take(1)
+    val file = new Path(dirs.head, FsUtil.listPartFiles(spark, dirs.head.toString).min)
+    val dataSchema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file, ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file, conf), SKIP_ROW_GROUPS)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(dataSchema).option("basePath", path)
+      .parquet(dirs.map(_.toString): _*)
       .filter(col("z2p").isin(cells.toIndexedSeq: _*))
       .filter(st.intersects(col("extent"), window)) // pushdown-rewritten ranges
       .filter(st.intersects(col(geomCol), window))  // exact JTS residual

@@ -2,13 +2,17 @@ package graft.sources
 
 import graft.SparkTestSession
 import graft.functions.st
+import graft.geom.Z2
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** The Z2 layout must actually prune: fewer files read for a window
-  * query than exist on disk, with identical results to a full scan.
+  * query than exist on disk, with identical results to a full scan, and
+  * no Spark job before the window's scan.
   */
 class SpatialLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
@@ -18,6 +22,9 @@ class SpatialLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers 
     SpatialLayout.writeZ2(pts, "geom", path, level = 12, dirLevel = 3)
     path
   }
+
+  private def cellDirs(path: String): Set[String] =
+    new java.io.File(path).list().filter(_.startsWith("z2p=")).toSet
 
   private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec = {
     df.collect() // execute so metrics fill
@@ -72,6 +79,53 @@ class SpatialLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers 
     val got = SpatialLayout.readWindow(spark, path, 0.0, 0.0, 10.0, 10.0, dirLevel = 3)
       .select("id").collect().map(_.getLong(0)).toSet
     got shouldBe Set(2L, 3L)
+    // window (60,-3)-(70,3): none of its covered cells has a directory of
+    // its own, so only the spill directory can return polygon 2
+    val spanned = Z2.coverEnvelope(60.0, -3.0, 70.0, 3.0, 3).map(c => s"z2p=$c").toSet
+    cellDirs(path).intersect(spanned) shouldBe empty
+    SpatialLayout.readWindow(spark, path, 60.0, -3.0, 70.0, 3.0, dirLevel = 3)
+      .select("id").collect().map(_.getLong(0)).toSet shouldBe Set(2L)
+  }
+
+  test("readWindow submits no job before the scan and lists only the covered directories") {
+    val path = layoutPath // written before counting
+    val (xmin, ymin, xmax, ymax) = (-140.0, 0.0, -100.0, 40.0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val df = try {
+      val df = SpatialLayout.readWindow(spark, path, xmin, ymin, xmax, ymax, dirLevel = 3)
+      GraftBridge.drainListenerBus(spark)
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get shouldBe 0
+    val covered = (Z2.coverEnvelope(xmin, ymin, xmax, ymax, 3) :+ SpatialLayout.SpillKey)
+      .map(c => s"z2p=$c").toSet
+    val expected = cellDirs(path).intersect(covered)
+    expected should not be empty
+    expected.size should be < cellDirs(path).size
+    scanOf(df).relation.location.rootPaths.map(_.getName).sorted shouldBe expected.toSeq.sorted
+  }
+
+  test("a window over cells with no directory is empty, with the full-scan schema") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rows = Seq(Row(1L, "POINT (1 1)"), Row(2L, "POINT (2 2)"), Row(3L, "POINT (1.5 2)"))
+    val df = spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*),
+        StructType(Seq(StructField("id", LongType), StructField("wkt", StringType))))
+      .withColumn("geom", st.geomFromWKT(col("wkt"))).drop("wkt")
+    val path = java.nio.file.Files.createTempDirectory("graft-z2one").toString + "/pts"
+    SpatialLayout.writeZ2(df, "geom", path, level = 12, dirLevel = 3)
+    cellDirs(path).size shouldBe 1
+    val got = SpatialLayout.readWindow(spark, path, -100.0, -50.0, -90.0, -40.0, dirLevel = 3)
+    got.count() shouldBe 0L
+    val fields = (d: org.apache.spark.sql.DataFrame) => d.schema.map(f => f.name -> f.dataType)
+    fields(got) shouldBe fields(spark.read.parquet(path))
+    fields(got).map(_._1) should contain("z2p")
   }
 
   test("row-group range filters reach the parquet scan") {
